@@ -271,8 +271,11 @@ def nn_descent_graph(df: DataFrame, id_col: str, vec_col: str,
             np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1)))
         # half-away-from-zero at round_dp (Spark F.round / DuckDB round;
         # NOT np.round's half-even) — cosine is signed, so the knn.py
-        # non-negative floor(x·s+0.5) form gets a sign wrapper
-        sim = np.sign(sim) * np.floor(np.abs(sim) * scale + 0.5) / scale
+        # non-negative floor(x·s+0.5) form gets a sign wrapper; + 0.0
+        # turns the -0.0 it gives for sims in (-0.5e-6, 0) into +0.0,
+        # as Spark's and DuckDB's round do
+        sim = np.sign(sim) * np.floor(np.abs(sim) * scale + 0.5) / scale \
+            + 0.0
         order = np.lexsort((dst, -sim, src))
         src_o, dst_o, sim_o = src[order], dst[order], sim[order]
         starts = np.flatnonzero(np.r_[True, src_o[1:] != src_o[:-1]])

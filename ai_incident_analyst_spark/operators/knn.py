@@ -79,6 +79,38 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     )
 
 
+def block_topk(qmat, cmat, k: int, metric: str = "l2_sq"):
+    """Exact top-k of every query row against one block of corpus rows.
+
+    ``qmat`` is (nq, d) and ``cmat`` (nc, d), both float64. Scores come
+    from one BLAS matmul: ‖q−c‖² = ‖q‖²+‖c‖²−2q·cᵀ for ``l2_sq``, q·c
+    over the norms for ``cosine``. Returns ``(idx, score)``, both
+    (nq, min(k, nc)): column indices into ``cmat``, best first, and
+    their scores. Ties keep ``cmat``'s row order (stable argsort), so a
+    block sorted by id breaks ties by id ascending, like ``knn_join``.
+    A zero-norm vector scores NaN under cosine and ranks last; the same
+    input makes ``knn_join`` raise DIVIDE_BY_ZERO under ANSI mode.
+    """
+    import numpy as np
+
+    if metric not in _METRICS:
+        raise ValueError(f"metric must be one of {_METRICS}")
+    qnorm2 = (qmat * qmat).sum(axis=1)
+    cnorm2 = (cmat * cmat).sum(axis=1)
+    dot = qmat @ cmat.T  # (nq, nc) — BLAS
+    if metric == "l2_sq":
+        score = qnorm2[:, None] + cnorm2[None, :] - 2.0 * dot
+        key = score
+    else:
+        with np.errstate(divide="ignore", invalid="ignore"):
+            score = dot / (np.sqrt(qnorm2)[:, None]
+                           * np.sqrt(cnorm2)[None, :])
+        key = -score
+    kk = min(k, score.shape[1])
+    idx = np.argsort(key, axis=1, kind="stable")[:, :kk]
+    return idx, np.take_along_axis(score, idx, axis=1)
+
+
 def knn_join_blocked(queries: DataFrame, corpus: DataFrame, k: int = 5,
                      metric: str = "l2_sq",
                      query_id: str = "query_id", query_vec: str = "query_vec",
@@ -87,8 +119,8 @@ def knn_join_blocked(queries: DataFrame, corpus: DataFrame, k: int = 5,
 
     Same result as ``knn_join`` (exact, same tie-break); physical plan
     trades the Catalyst expression for one Arrow pass over the corpus with
-    BLAS matmuls and a per-partition top-k, then a final global top-k over
-    #partitions·k candidates per query.
+    BLAS matmuls and a per-partition top-k (``block_topk``), then a final
+    global top-k over #partitions·k candidates per query.
     """
     import numpy as np
 
@@ -110,30 +142,17 @@ def knn_join_blocked(queries: DataFrame, corpus: DataFrame, k: int = 5,
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, qmat_ = bq.value
-        qnorm2 = (qmat_ * qmat_).sum(axis=1)  # (nq,)
-        qnormlen = np.sqrt(qnorm2)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             cid = pdf[corpus_id].to_numpy()
             cmat = np.array(list(pdf[corpus_vec]), dtype=np.float64)  # (nc, d)
-            dot = qmat_ @ cmat.T  # (nq, nc) — BLAS
-            if metric == "l2_sq":
-                cnorm2 = (cmat * cmat).sum(axis=1)
-                score = qnorm2[:, None] + cnorm2[None, :] - 2.0 * dot
-            else:
-                cnormlen = np.sqrt((cmat * cmat).sum(axis=1))
-                score = dot / (qnormlen[:, None] * cnormlen[None, :])
-            kk = min(k, score.shape[1])
-            # local top-k per query; ties by corpus id ascending
-            key = -score if want_max else score
-            idx = np.argsort(key, axis=1, kind="stable")[:, :kk]
-            rows = {
-                "query_id": np.repeat(qids_, kk),
+            idx, top = block_topk(qmat_, cmat, k, metric)
+            yield pd.DataFrame({
+                "query_id": np.repeat(qids_, idx.shape[1]),
                 "vec_id": cid[idx].ravel(),
-                "distance": np.take_along_axis(score, idx, axis=1).ravel(),
-            }
-            yield pd.DataFrame(rows)
+                "distance": top.ravel(),
+            })
 
     # corpus rows sorted by id within partition → stable argsort breaks
     # ties by vec_id, matching knn_join's ordering

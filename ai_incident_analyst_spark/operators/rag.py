@@ -20,10 +20,13 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import day_trunc_str, format_log_line
+
+#: the history entry's feedback column (app.py:117-124)
+FEEDBACK_TYPE = "struct<vote:string,comment:string>"
 
 
 def pick_batch(df: DataFrame, batch_size: int, order_col: str) -> DataFrame:
@@ -32,27 +35,36 @@ def pick_batch(df: DataFrame, batch_size: int, order_col: str) -> DataFrame:
     return df.orderBy(F.col(order_col).asc()).limit(batch_size)
 
 
+def prompt_col(ts: str = "timestamp", service: str = "container_name",
+               level: str = "level", message: str = "message") -> Column:
+    """A9 as an aggregate column: the formatted lines (F17) of every row,
+    newline-joined in deterministic (ts, message) order.
+
+    `collect_list` alone has nondeterministic order, so the sort key rides
+    inside the collected struct and is sorted post-collect (array_sort on
+    struct sorts lexicographically by field order).
+    """
+    line = format_log_line(F.col(ts), F.col(service), F.col(level), F.col(message))
+    s = F.struct(F.col(ts).alias("k1"), F.col(message).alias("k2"),
+                 line.alias("line"))
+    return F.array_join(
+        F.transform(F.array_sort(F.collect_list(s)), lambda e: e["line"]),
+        "\n")
+
+
+def sorted_struct_array(*cols: str) -> Column:
+    """Aggregate column: ``cols`` of every row as one array<struct>,
+    sorted lexicographically by field order — the layout of a history
+    entry's ``batch_logs`` and ``similar_logs`` (main.py:79-87)."""
+    return F.array_sort(F.collect_list(F.struct(*cols)))
+
+
 def build_prompt_df(df: DataFrame,
                     ts: str = "timestamp", service: str = "container_name",
                     level: str = "level", message: str = "message") -> DataFrame:
-    """A9: aggregate the batch into ONE prompt row.
-
-    Formatted lines (F17) collected in deterministic (ts, message) order and
-    newline-joined — `collect_list` alone has nondeterministic order, so the
-    sort key rides inside the collected struct and is sorted post-collect
-    (array_sort on struct sorts lexicographically by field order).
-    """
-    line = format_log_line(F.col(ts), F.col(service), F.col(level), F.col(message))
-    return df.select(
-        F.struct(F.col(ts).alias("k1"), F.col(message).alias("k2"),
-                 line.alias("line")).alias("s")
-    ).agg(
-        F.array_join(
-            F.transform(F.array_sort(F.collect_list("s")), lambda s: s["line"]),
-            "\n",
-        ).alias("prompt"),
-        F.count("*").alias("n_logs"),
-    )
+    """A9: aggregate the batch into ONE prompt row (``prompt_col``)."""
+    return df.agg(prompt_col(ts, service, level, message).alias("prompt"),
+                  F.count("*").alias("n_logs"))
 
 
 def build_history_entry(batch: DataFrame, similar: DataFrame,
@@ -61,14 +73,13 @@ def build_history_entry(batch: DataFrame, similar: DataFrame,
     full batch and similar-hit arrays as array<struct>."""
     meta = batch.orderBy(F.col("timestamp").asc()).limit(1)
     batch_arr = batch.agg(
-        F.array_sort(F.collect_list(F.struct(*batch.columns))).alias("batch_logs"))
+        sorted_struct_array(*batch.columns).alias("batch_logs"))
     sim_arr = similar.agg(
-        F.array_sort(F.collect_list(F.struct(*similar.columns))).alias("similar_logs"))
+        sorted_struct_array(*similar.columns).alias("similar_logs"))
     return (
         meta.crossJoin(batch_arr).crossJoin(sim_arr)
         .withColumn("llm_output", F.lit(llm_output))
-        .withColumn("feedback",
-                    F.lit(None).cast("struct<vote:string,comment:string>"))
+        .withColumn("feedback", F.lit(None).cast(FEEDBACK_TYPE))
     )
 
 

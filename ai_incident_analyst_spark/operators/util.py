@@ -54,46 +54,6 @@ def guard_pairwise_input(df: DataFrame, max_rows: int | None, operator: str,
             f"if you accept the cost.")
 
 
-def guard_pairwise_lazy(df: DataFrame, max_rows: int | None, operator: str,
-                        sibling: str, force: bool = False) -> DataFrame:
-    """In-plan variant of ``guard_pairwise_input`` (r14, the r13
-    verdict's "cheaper guard shape" ask): instead of an EAGER
-    ``limit(cap+1).count()`` job at DataFrame-build time — pure
-    scheduling overhead at every in-cap scale — the returned frame
-    carries a 1-row broadcast gate subtree that counts
-    ``limit(cap+1)`` rows of the input INSIDE the first action and
-    ``raise_error``s when the cap is exceeded.
-
-    Fail-fast is preserved: the quadratic expansion sits ABOVE the
-    gate join, so its stages cannot launch until the broadcast (the
-    O(cap) count) completes — an over-cap input still dies before any
-    pairwise work runs, just at action time instead of build time
-    (callers catch ``SparkRuntimeException`` with the same message;
-    ``PairwiseInputCapExceeded`` remains for the eager form). The
-    input subtree is referenced twice either way (count + real use),
-    so total work is unchanged; the separate driver-synchronous job
-    is what disappears.
-    """
-    if force or max_rows is None:
-        return df
-    msg = (f"{operator}: input has more than {max_rows} rows, and this "
-           f"operator's candidate set grows quadratically (measured: "
-           f"see SCALING.md quadratic-contrast cells). Use the bounded "
-           f"sibling — {sibling} — or pass force=True / raise max_rows "
-           f"if you accept the cost.")
-    gate = (
-        df.limit(max_rows + 1)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .select(
-            F.when(F.col("__n") <= max_rows, F.lit(1))
-            .otherwise(F.raise_error(F.lit(msg)))
-            .alias("__pairwise_guard"))
-    )
-    return (df.crossJoin(F.broadcast(gate))
-            .where(F.col("__pairwise_guard").isNotNull())
-            .drop("__pairwise_guard"))
-
-
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     """Ensure enough partitions for CPU-bound per-row work.
 

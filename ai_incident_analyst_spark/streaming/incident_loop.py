@@ -12,9 +12,19 @@ micro-batch runs the SAME per-batch composition the batch e2e drives
 entry per non-empty window.
 
 Why ``foreachBatch`` and not a pure streaming DAG: the loop body needs
-batch-only operators (global sort for ``pick_batch``, a k-NN broadcast
-join, one driver-side LLM call per batch) — exactly the
-micro-batch-as-batch escape hatch ``foreachBatch`` exists for.
+batch-only operators (global sort for ``pick_batch``, one driver-side
+LLM call per batch) — exactly the micro-batch-as-batch escape hatch
+``foreachBatch`` exists for.
+
+Per window, ONE Spark action narrows the batch to its ≤ ``batch_size``
+picked rows and returns everything the rest of the loop needs (prompt,
+``batch_logs``, first-row metadata, query vectors, row count): dedup →
+redact → pick → embed → one aggregate. Pick runs before embed because
+the embedding is a row-wise function of ``message`` and ``level`` and
+pick orders by ``timestamp`` alone, so only kept rows are embedded. The
+kNN, the LLM call and the entry row then run on the driver, and the
+batch source is scanned once (stream progress reports the window's true
+``numInputRows``).
 
 Restart semantics: processed-window offsets live in the checkpoint, so
 a killed and restarted job resumes at the first unprocessed window and
@@ -24,8 +34,9 @@ mid-stream restart vs per-window batch replay of
 ``process_incident_batch`` produce identical history tables).
 
 At scale: each micro-batch is one bounded remote fetch; the corpus side
-of the k-NN is a broadcast of the (bounded) prior-incident index; the
-history append is a day-partitioned parquet write — no unbounded state
+of the k-NN is the (bounded) prior-incident index, collected to the
+driver as one matrix per window; the history append is a
+day-partitioned parquet write — no unbounded state
 lives in the stream itself, so the job's memory footprint is
 independent of how long it has been running.
 """
@@ -36,16 +47,27 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..functions.redaction import DEFAULT_PATTERNS, LLM_SIDE_PATTERNS, redact
 from ..operators.dedup import dedup_keep_first
 from ..operators.embedding import embed_text
-from ..operators.knn import knn_join
+from ..operators.knn import block_topk
 from ..operators.rag import (
+    FEEDBACK_TYPE,
     append_history_partitioned,
     pick_batch,
-    run_rag_batch,
+    prompt_col,
+    sorted_struct_array,
 )
+
+# knn_join and run_rag_batch are no longer called here; they stay bound
+# because perfbench/incident_loop.py wraps these names in its traced run
+from ..operators.knn import knn_join  # noqa: F401
+from ..operators.rag import run_rag_batch  # noqa: F401
+
+#: first-row metadata columns of a history entry, in stored order
+_META = ("timestamp", "container_name", "namespace_name", "level")
 
 
 def process_incident_batch(batch: DataFrame, corpus: DataFrame,
@@ -58,47 +80,73 @@ def process_incident_batch(batch: DataFrame, corpus: DataFrame,
 
     ``batch`` carries the logapi schema (epoch-ms ``timestamp``,
     ``level``, ``container_name``, ``message``); ``corpus`` is the
-    prior-incident index ``(hist_id, embedding)``. Returns the LLM
-    output, or None for an empty batch (no history entry — the
-    reference skips runs that fetch nothing). Shared verbatim by the
-    streaming loop and the batch replay so incremental == batch is an
-    identity by construction.
+    prior-incident index ``(hist_id, embedding)``, keyed by ``hist_id``.
+    Returns the LLM output, or None for an empty batch (no history entry
+    — the reference skips runs that fetch nothing). Shared verbatim by
+    the streaming loop and the batch replay so incremental == batch is
+    an identity by construction.
     """
-    if batch.isEmpty():
-        return None
     arr = batch.withColumn("__arrival", F.monotonically_increasing_id())
     deduped = dedup_keep_first(arr, ["message", "timestamp"],
                                "__arrival").drop("__arrival")
     clean = deduped.withColumn(
         "message", redact("message", DEFAULT_PATTERNS + LLM_SIDE_PATTERNS))
-    picked = pick_batch(embed_text(clean, ["message", "level"], dim=dim),
-                        batch_size, "timestamp")
-    q = picked.select(
-        F.monotonically_increasing_id().alias("query_id"),
-        F.col("embedding").alias("query_vec"))
-    hits = knn_join(q, corpus, k=k, metric="cosine",
-                    corpus_id="hist_id", corpus_vec="embedding")
-    similar = corpus.join(
-        hits.select(F.col("vec_id").alias("hist_id")).distinct(), "hist_id")
-    # ISO timestamp for the entry row: day-partitions the history sink
-    # and matches the reference's string timestamps (main.py:79-87)
-    entry_src = (
-        picked.drop("embedding")
-        .withColumnRenamed("timestamp", "__ts_ms")
-        .withColumn("timestamp", F.date_format(
-            F.timestamp_millis(F.col("__ts_ms")),
-            "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-        .drop("__ts_ms")
-    )
-    entry, llm_out = run_rag_batch(entry_src, similar, llm_fn, notify_fn)
+    picked = embed_text(pick_batch(clean, batch_size, "timestamp"),
+                        ["message", "level"], dim=dim)
+    # ISO timestamp for the entry: day-partitions the history sink and
+    # matches the reference's string timestamps (main.py:79-87)
+    log_cols = [c for c in clean.columns if c != "timestamp"] + ["timestamp"]
+    rows = (picked.withColumnRenamed("timestamp", "__ts_ms")
+            .withColumn("timestamp", F.date_format(
+                F.timestamp_millis(F.col("__ts_ms")),
+                "yyyy-MM-dd'T'HH:mm:ss'Z'")))
+    narrowed = rows.agg(
+        F.count("*").alias("n"),
+        prompt_col().alias("prompt"),
+        sorted_struct_array(*log_cols).alias("batch_logs"),
+        # the earliest row's metadata; the epoch-ms key orders it
+        F.min(F.struct("__ts_ms", *_META)).alias("first"),
+        F.collect_list("embedding").alias("query_vecs"))
+    got = narrowed.first()
+    if got["n"] == 0:
+        return None
+
+    llm_out = llm_fn(got["prompt"])
+    if notify_fn is not None:
+        notify_fn(llm_out)
+
+    index_cols = ["hist_id"] + [c for c in corpus.columns if c != "hist_id"]
+    index = corpus.select(*index_cols)
+    similar = _similar_incidents(got["query_vecs"], index.collect(), k)
+    meta_type = narrowed.schema["first"].dataType
+    schema = StructType(
+        [meta_type[c] for c in _META]
+        + [StructField("batch_logs", narrowed.schema["batch_logs"].dataType),
+           StructField("similar_logs", ArrayType(index.schema)),
+           StructField("llm_output", StringType()),
+           StructField("feedback", StructType.fromDDL(FEEDBACK_TYPE))])
+    entry = batch.sparkSession.createDataFrame(
+        [(*(got["first"][c] for c in _META), got["batch_logs"], similar,
+          llm_out, None)], schema)
     # namespace_name rides along so the stored table feeds the dashboard
     # surfaces (history_filter / history_metrics) unmodified
-    append_history_partitioned(
-        entry.select("timestamp", "container_name", "namespace_name",
-                     "level", "batch_logs", "similar_logs", "llm_output",
-                     "feedback"),
-        history_path)
+    append_history_partitioned(entry, history_path)
     return llm_out
+
+
+def _similar_incidents(query_vecs: list, index: list, k: int) -> list:
+    """Index rows (``hist_id`` first) in any query's exact cosine top-k,
+    sorted by ``hist_id`` — ``knn_join``'s result, with its id
+    tie-break, joined back to the index rows."""
+    import numpy as np
+
+    if not index:
+        return []
+    index = sorted(index, key=lambda r: r[0])
+    cmat = np.array([r["embedding"] for r in index], dtype=np.float64)
+    qmat = np.array(query_vecs, dtype=np.float64)
+    idx, _ = block_topk(qmat, cmat, k, "cosine")
+    return [index[i] for i in np.unique(idx)]
 
 
 def incident_stream(spark, source_options: dict, corpus: DataFrame,

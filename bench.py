@@ -220,7 +220,7 @@ HEADLINE = [
 
 
 def read_cpu_stat() -> tuple[int, int] | tuple[None, None]:
-    """(total_jiffies, steal+guest jiffies) from the aggregate cpu line
+    """(total_jiffies, steal jiffies) from the aggregate cpu line
     of /proc/stat — the host-contention counter loadavg can't see (r13
     verdict: two rounds of adjudication hinged on prose about steal
     time; now every bench cell records its own steal delta)."""
@@ -232,10 +232,11 @@ def read_cpu_stat() -> tuple[int, int] | tuple[None, None]:
         vals = [int(x) for x in parts[1:]]
         # fields: user nice system idle iowait irq softirq steal guest
         # guest_nice — steal (7) is time this VM's vCPUs wanted to run
-        # but the hypervisor ran someone else; guest (8) is time spent
-        # running nested guests (another tenant signature on some hosts)
-        steal = (vals[7] if len(vals) > 7 else 0) \
-            + (vals[8] if len(vals) > 8 else 0)
+        # but the hypervisor ran someone else. guest (8) and guest_nice
+        # (9) are already counted inside user and nice, so the total
+        # sums the first eight fields only
+        vals = vals[:8]
+        steal = vals[7] if len(vals) > 7 else 0
         return sum(vals), steal
     except Exception:
         return None, None
@@ -344,7 +345,7 @@ def main():
     # them, never memos or cached frames.
     isolate = os.environ.get("SPARK_GRAFT_BENCH_ISOLATE", "1") != "0"
     # Per-cell noise telemetry (r14, the r13 verdict's top ask): each
-    # cell records the loadavg when it started and the CPU steal+guest
+    # cell records the loadavg when it started and the CPU steal
     # fraction ACROSS the cell from /proc/stat, so a PERF comparison can
     # separate plan deltas from host-contention epochs without a rerun
     # (r13: identical-code benches spread 219→507 s, an 8-core total
@@ -417,7 +418,7 @@ def main():
         "unit": "sec",
         "queries": times,
         # per-cell noise context (r14): run list, loadavg at cell start,
-        # steal+guest CPU % across the cell, best-of-N spread and the
+        # steal CPU % across the cell, best-of-N spread and the
         # noise_suspect flag — "queries" stays a flat name→seconds map
         # so older tooling keeps parsing
         "cells": cells,

@@ -162,3 +162,17 @@ def test_nn_descent_monotone_improvement(spark, vecs):
 
     r1, r2 = recall(1), recall(2)
     assert r2 >= r1
+
+
+def test_nn_descent_rounds_tiny_negative_sim_to_positive_zero(spark):
+    """A cosine in (-0.5e-6, 0) rounds to +0.0 at round_dp=6, as Spark's
+    and DuckDB's round give — not the -0.0 of the sign-wrapped floor."""
+    from ai_incident_analyst_spark.operators.graph_ann import (
+        nn_descent_graph)
+    vecs = np.array([[1.0, 0.0], [-1e-7, 1.0]])
+    assert -0.5e-6 < _cos(vecs[0], vecs[1]) < 0
+    got = nn_descent_graph(_vecs_df(spark, vecs), "vec_id", "embedding",
+                           k=1, rounds=1).collect()
+    assert sorted((r["src"], r["dst"]) for r in got) == [(0, 1), (1, 0)]
+    assert all(r["sim"] == 0.0 and math.copysign(1.0, r["sim"]) == 1.0
+               for r in got)

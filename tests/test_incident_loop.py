@@ -3,8 +3,10 @@ repeated-run main loop as one foreachBatch job over the logapi stream
 reader, with the checkpoint-restart incremental==batch identity."""
 
 import json
+import re
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from ai_incident_analyst_spark.operators.embedding import embed_text
@@ -50,6 +52,13 @@ def _corpus(spark):
              (102, "OOM killed worker 3")],
             "hist_id long, message string"),
         ["message"], dim=32).select("hist_id", "embedding")
+
+
+def _offset_ms(text):
+    """Epoch ms of a progress offset (``"{'ts': ...}"``; ``"None"`` before
+    the first batch, i.e. the stream's ``since_ms``)."""
+    m = re.search(r"\d+", text or "")
+    return int(m.group()) if m else T0
 
 
 def _entry_key(r):
@@ -168,6 +177,15 @@ def test_streamed_history_feeds_dashboard_and_feedback(spark, tmp_path):
     finally:
         q.stop()
 
+    # one scan per window: progress counts each window's rows once
+    prog = q.recentProgress
+    assert prog
+    for p in prog:
+        lo, hi = (_offset_ms(o) for o in (p.sources[0].startOffset,
+                                          p.sources[0].endOffset))
+        assert p.numInputRows == sum(
+            1 for r in _rows() if lo <= r["timestamp"] < hi), p.json
+
     stored = spark.read.parquet(hist)
     assert stored.count() == 3
 
@@ -194,3 +212,62 @@ def test_streamed_history_feeds_dashboard_and_feedback(spark, tmp_path):
     assert voted.feedback.vote == "up"
     other = again.filter(F.col("timestamp") != ts).collect()
     assert all(r.feedback is None for r in other)
+
+
+@pytest.mark.parametrize("k", [1, 2])
+def test_picked_rows_and_knn_match_reference(spark, tmp_path, k):
+    """A window larger than ``batch_size``: the entry holds the
+    ``batch_size`` earliest rows left after dedup, and its similar
+    incidents are exactly what the reference ``knn_join`` returns for
+    those rows — including an exact score tie between two identical
+    index vectors, which goes to the lower ``hist_id``."""
+    from ai_incident_analyst_spark.operators.knn import knn_join
+    from ai_incident_analyst_spark.sources.logapi import DEFAULT_SCHEMA
+
+    def row(minute, level, svc, msg):
+        return (T0 + minute * 60_000, level, svc, msg, "e", "ns")
+
+    rows = [  # arrival order is not time order
+        row(5, "error", "svc-disk", "disk full on node 3"),
+        row(1, "error", "svc-db", "db timeout for a@b.com"),
+        row(4, "info", "svc-q", "slow query on shard 2"),
+        row(1, "error", "svc-db", "db timeout for a@b.com"),  # exact dup
+        row(3, "warn", "svc-oom", "OOM killed worker 7"),
+        row(2, "error", "svc-net", "conn reset by peer"),
+    ]
+    batch = spark.createDataFrame(rows, DEFAULT_SCHEMA)
+    # 301 and 300 embed identically and match the conn-reset row
+    # (embedded as "message level") with cosine 1
+    corpus = embed_text(
+        spark.createDataFrame(
+            [(301, "conn reset by peer error"),
+             (300, "conn reset by peer error"),
+             (302, "OOM killed worker 3"),
+             (303, "db timeout for [REDACTED_EMAIL]"),
+             (304, "disk full on node 3 error")],
+            "hist_id long, message string"),
+        ["message"], dim=32).select("hist_id", "embedding")
+    hist = str(tmp_path / "history")
+    out = process_incident_batch(batch, corpus, lambda p: "RCA", hist,
+                                 batch_size=3, k=k)
+    assert out == "RCA"
+    (entry,) = spark.read.parquet(hist).collect()
+
+    want_ts = [time.strftime("%Y-%m-%dT%H:%M:%SZ",
+                             time.gmtime((T0 + m * 60_000) / 1000))
+               for m in (1, 2, 3)]
+    assert sorted(b.timestamp for b in entry.batch_logs) == want_ts
+    assert entry.timestamp == want_ts[0]
+    assert entry.container_name == "svc-db"
+
+    picked = spark.createDataFrame(
+        [(b.message, b.level) for b in entry.batch_logs],
+        "message string, level string")
+    q = embed_text(picked, ["message", "level"], dim=32).select(
+        F.monotonically_increasing_id().alias("query_id"),
+        F.col("embedding").alias("query_vec"))
+    ref = knn_join(q, corpus, k=k, metric="cosine",
+                   corpus_id="hist_id", corpus_vec="embedding")
+    want_ids = sorted({r.vec_id for r in ref.collect()})
+    assert [s.hist_id for s in entry.similar_logs] == want_ids
+    assert 300 in want_ids and (k == 2) == (301 in want_ids)
