@@ -34,6 +34,8 @@ from math import factorial
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 
 def _weight_lattice(channels: list[str]):
     """Rows (channel, bit, mask_without, weight_scaled) for every
@@ -84,8 +86,8 @@ def shapley_attribution(df: DataFrame, unit_col: str, channel_col: str,
                      .cast("long").alias("vq"))
              .localCheckpoint(eager=False))
     spark = df.sparkSession
-    lat = F.broadcast(spark.createDataFrame(
-        _weight_lattice(channels),
+    lat = F.broadcast(local_frame(
+        spark, _weight_lattice(channels),
         "channel string, bit long, mask_wo long, w long"))
     v0 = rates.withColumnRenamed("mask", "mask_wo") \
         .withColumnRenamed("vq", "vq0")

@@ -52,7 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import spread
+from .util import local_frame, spread
 
 
 def _init_centroids(df: DataFrame, id_col: str, vec_col: str,
@@ -178,8 +178,8 @@ def centroids_df(spark, centroids: np.ndarray,
                  centroid_vec: str = "centroid") -> DataFrame:
     """The (k,d) ndarray as the tiny DataFrame the IVF operators take."""
     rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)]
-    return spark.createDataFrame(
-        rows, schema=f"{centroid_id} long, {centroid_vec} array<double>")
+    return local_frame(
+        spark, rows, f"{centroid_id} long, {centroid_vec} array<double>")
 
 
 def kmeans_assign(df: DataFrame, vec_col: str, centroids: np.ndarray,

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import guard_pairwise_input, spread
+from .util import guard_pairwise_input, local_frame, spread
 
 
 # ---------------------------------------------------------------------------
@@ -864,8 +864,8 @@ def connected_components(edges: DataFrame, src: str = "id_a",
             if ru != rv:
                 parent[max(ru, rv)] = min(ru, rv)
         rows = [(n, find(n)) for n in parent]
-        return edges.sparkSession.createDataFrame(
-            rows, "node long, cluster_id long")
+        return local_frame(
+            edges.sparkSession, rows, "node long, cluster_id long")
     from pyspark.sql import Observation
 
     # Distributed path (r12): HYBRID hash-min LP + alternating star

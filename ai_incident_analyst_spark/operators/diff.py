@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 
 def table_diff(old: DataFrame, new: DataFrame,
                keys: list[str]) -> DataFrame:
@@ -77,6 +79,6 @@ def schema_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     for c in sorted(o.keys() & n.keys()):
         if o[c] != n[c]:
             rows.append((c, "type_changed", o[c], n[c]))
-    return spark.createDataFrame(
-        rows, "column string, change string, old_type string, "
+    return local_frame(
+        spark, rows, "column string, change string, old_type string, "
               "new_type string")

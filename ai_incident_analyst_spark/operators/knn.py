@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, l2_sq
-from .util import spread
+from .util import local_frame, spread
 
 _METRICS = ("l2_sq", "cosine")
 
@@ -1007,8 +1007,8 @@ def ivfpq_write_index(corpus: DataFrame, centroids: DataFrame, path: str,
         + [("book", j, c, [float(x) for x in books[j, c]], "")
            for j in range(books.shape[0]) for c in range(books.shape[1])]
     )
-    spark.createDataFrame(
-        meta_rows,
+    local_frame(
+        spark, meta_rows,
         "kind string, i int, j int, vec array<double>, cell_id string")         .coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
 
 

@@ -22,8 +22,10 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.text import day_trunc_str, format_log_line
+from .util import local_frame
 
 #: the history entry's feedback column (app.py:117-124)
 FEEDBACK_TYPE = "struct<vote:string,comment:string>"
@@ -108,21 +110,36 @@ def history_filter(df: DataFrame, service: str | None = None,
 
 
 def history_metrics(df: DataFrame, ts: str = "timestamp") -> dict[str, DataFrame]:
-    """Dashboard GET /metrics (app.py:15-44): four group-counts off one
-    cached scan (the reference re-reads the file per request; we cache)."""
-    df = df.cache()
-    return {
-        "by_day": (df.groupBy(day_trunc_str(ts).alias("day")).count().orderBy("day")),
-        "by_service": df.groupBy(
-            F.coalesce(F.col("container_name"), F.lit("unknown")).alias("container_name")
-        ).count(),
-        "by_namespace": df.groupBy(
-            F.coalesce(F.col("namespace_name"), F.lit("unknown")).alias("namespace_name")
-        ).count(),
-        "by_level": df.groupBy(
-            F.coalesce(F.col("level"), F.lit("unknown")).alias("level")
-        ).count(),
-    }
+    """Dashboard GET /metrics (app.py:15-44): the four group-counts.
+
+    One ``groupingSets`` aggregate computes all four in one pass over
+    ``df`` and is collected once; its ``grouping_id`` column tells the
+    four apart, and each view is then a driver-built ``local_frame``.
+    The views are therefore a snapshot taken at call time: rows written
+    to the table afterwards do not show in them, and reading a view
+    starts no job. ``by_day`` is ascending with the NULL day first; the
+    other views are in key order, NULL keys counted as ``"unknown"``.
+    """
+    views = ("by_day", "by_service", "by_namespace", "by_level")
+    keyed = df.select(
+        day_trunc_str(ts).alias("day"),
+        *[F.coalesce(F.col(c), F.lit("unknown")).alias(c)
+          for c in ("container_name", "namespace_name", "level")])
+    names = keyed.columns
+    rows = (keyed.groupingSets([[c] for c in names], *names)
+            .agg(F.grouping_id().alias("gid"), F.count("*").alias("count"))
+            .collect())
+    out = {}
+    for i, (view, name) in enumerate(zip(views, names)):
+        # grouping_id sets the bit of every key NOT grouped, first key high
+        gid = (1 << len(names)) - 1 - (1 << (len(names) - 1 - i))
+        counts = sorted(((r[name], r["count"]) for r in rows
+                         if r["gid"] == gid),
+                        key=lambda kv: (kv[0] is not None, kv[0] or ""))
+        schema = StructType([keyed.schema[name],
+                             StructField("count", LongType(), False)])
+        out[view] = local_frame(df.sparkSession, counts, schema)
+    return out
 
 
 def upsert_feedback(df: DataFrame, entry_ts: str, vote: str,
@@ -143,6 +160,20 @@ def append_history_partitioned(entry: DataFrame, path: str,
      .write.partitionBy("__day").mode("append").parquet(path))
 
 
+def history_day(spark, path: str, entry_ts: str) -> DataFrame | None:
+    """The one ``__day`` directory of the day-partitioned history table
+    at ``path`` that holds ``entry_ts``, read alone
+    (``sources.layout.read_partitions``); None when that day has no
+    directory. The day is ``to_date(entry_ts)``, evaluated on a one-row
+    local frame, which starts no job."""
+    from ..sources.layout import read_partitions
+
+    day = (local_frame(spark, [(entry_ts,)], "ts string")
+           .select(F.to_date("ts").cast("string")).first()[0])
+    return None if day is None else \
+        read_partitions(spark, path, "__day", [day])
+
+
 def upsert_feedback_on_disk(spark, path: str, entry_ts: str, vote: str,
                             comment: str,
                             ts_col: str = "timestamp") -> None:
@@ -152,16 +183,17 @@ def upsert_feedback_on_disk(spark, path: str, entry_ts: str, vote: str,
     ``upsert_feedback`` is the in-memory analog but — applied to a
     persisted table — would rewrite every row. This variant is the
     parquet equivalent of a Delta/Iceberg MERGE touching one file group:
-    partition pruning restricts the read to the single ``__day``
-    directory holding ``entry_ts``, the conditional struct rebuild runs
-    over just those rows, and dynamic partition overwrite replaces ONLY
-    that directory — the other N days of history are never read or
-    written.
+    the read is the single ``__day`` directory holding ``entry_ts``
+    (``history_day``), the conditional struct rebuild runs over just
+    those rows, and dynamic partition overwrite replaces ONLY that
+    directory — the other N days of history are never read or written,
+    nor even listed. A day with no directory is a no-op.
     """
     from ..sources.layout import dynamic_partition_overwrite
 
-    day = F.to_date(F.lit(entry_ts))
-    part = spark.read.parquet(path).filter(F.col("__day") == day)
+    part = history_day(spark, path, entry_ts)
+    if part is None:
+        return
     # materialize before overwriting: breaks the plan's dependency on the
     # input files (Spark refuses to overwrite a path it is reading), and
     # the partition is point-update-sized by construction

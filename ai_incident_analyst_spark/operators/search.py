@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import spread
+from .util import local_frame, spread
 
 
 def tokenize(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -73,7 +73,7 @@ def read_index_for_terms(spark, path: str, terms: list[str],
     """
     t = [s.lower() for s in terms]
     brows = (
-        spark.createDataFrame([(x,) for x in t], "term string")
+        local_frame(spark, [(x,) for x in t], "term string")
         .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("b"))
         .collect()
     )

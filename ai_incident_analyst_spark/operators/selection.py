@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity
+from .util import local_frame
 
 
 def _lit_vec(vals: list[float]) -> F.Column:
@@ -111,9 +112,9 @@ def mmr_select(df: DataFrame, id_col: str, vec_col: str, k: int,
         r = row[0]
         picked.append((rank, r["id"], list(r["x"]), r["rel"], r["mmr"]))
 
-    out = df.sparkSession.createDataFrame(
-        [(rk, i, rl, mm) for rk, i, _, rl, mm in picked],
-        schema="rank int, id long, rel double, mmr double")
+    out = local_frame(
+        df.sparkSession, [(rk, i, rl, mm) for rk, i, _, rl, mm in picked],
+        "rank int, id long, rel double, mmr double")
     return out.withColumnRenamed("id", id_col)
 
 
@@ -174,7 +175,7 @@ def k_center_select(df: DataFrame, id_col: str, vec_col: str, k: int,
             break   # k exceeds distinct rows
         r = row[0]
         picked.append((rank, r["id"], list(r["x"]), r["dist"]))
-    out = df.sparkSession.createDataFrame(
-        [(rk, i, d) for rk, i, _, d in picked],
-        schema="rank int, id long, dist double")
+    out = local_frame(
+        df.sparkSession, [(rk, i, d) for rk, i, _, d in picked],
+        "rank int, id long, dist double")
     return out.withColumnRenamed("id", id_col)

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 
 def ols_by_group(df: DataFrame, key: str, x_col: str,
                  y_col: str) -> DataFrame:
@@ -364,8 +366,8 @@ def srm_check(df: DataFrame, group_col: str,
     tot = sum(expected.values())
     design = [(k, float(v) / tot) for k, v in sorted(expected.items())]
     spark = df.sparkSession
-    d = F.broadcast(spark.createDataFrame(
-        design, "grp string, expected_frac double"))
+    d = F.broadcast(local_frame(
+        spark, design, "grp string, expected_frac double"))
     obs = (df.select(F.col(group_col).cast("string").alias("grp"))
            .groupBy("grp").agg(F.count(F.lit(1)).alias("n_obs")))
     unknown = obs.join(d, "grp", "left_anti").collect()

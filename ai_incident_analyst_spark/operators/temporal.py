@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 
 def asof_join(left: DataFrame, right: DataFrame, key: str,
               left_ts: str = "ts", right_ts: str = "ts",
@@ -461,5 +463,6 @@ def binary_segmentation(df: DataFrame, pos_col: str, value_col: str,
         found.append((rnd, r["p"], float(r["g_r"])))
 
     pos_type = df.select(pos_col).schema.fields[0].dataType.simpleString()
-    return df.sparkSession.createDataFrame(
-        found, schema=f"split_round int, pos {pos_type}, gain double")
+    return local_frame(
+        df.sparkSession, found,
+        f"split_round int, pos {pos_type}, gain double")

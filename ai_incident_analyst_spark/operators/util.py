@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def complete_case(df: DataFrame, cols: list[Column | str]) -> DataFrame:
@@ -82,3 +83,28 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def local_frame(spark, rows, schema: StructType | str) -> DataFrame:
+    """A driver-built frame as a LocalRelation: ``rows`` (tuples or
+    ``Row``s) become one ``pyarrow.Table`` against the Arrow form of
+    ``schema``, which ``createDataFrame`` ships whole. Collecting the
+    result starts no job, and no consumer runs a Python-worker stage —
+    ``createDataFrame(list)`` instead builds a pickled Python RDD that
+    every consumer re-runs through a worker.
+
+    Values go through ``schema.toInternal`` first, so naive datetimes,
+    dates and nested ``Row``s convert exactly as the list path converts
+    them; rows and schema (nullability included) equal the list path's.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in internal], type=f.type)
+         for i, f in enumerate(arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)

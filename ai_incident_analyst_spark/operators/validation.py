@@ -26,6 +26,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 
 @dataclass(frozen=True)
 class Check:
@@ -132,8 +134,8 @@ def run_checks(df: DataFrame, checks: list[Check]) -> DataFrame:
         v = (orphans / n) if n else 0.0
         rows.append(("referential", c.column, round(v, 9), c.threshold,
                      v <= c.threshold))
-    return spark.createDataFrame(
-        rows, "check string, column string, violation_frac double, "
+    return local_frame(
+        spark, rows, "check string, column string, violation_frac double, "
               "threshold double, passed boolean")
 
 

@@ -44,6 +44,7 @@ from .operators.knn import ivf_knn_join, knn_join, knn_join_blocked
 from .operators.multimodal import extract_features, make_media_table
 from .operators.rag import build_prompt_df
 from .operators.text_analysis import fingerprint, lang_id, quality_score, token_count
+from .operators.util import local_frame
 from .plans.logquery import LogQuery
 from .sources.tables import load_table, union_tables
 
@@ -1164,8 +1165,8 @@ def q_kmeans_centroids(spark, sf_dir):
     q6 = np.floor(cents * 1e6 + 0.5).astype("int64")
     rows = [(int(cl), int(pos + 1), int(q6[cl, pos]))
             for cl in range(q6.shape[0]) for pos in range(q6.shape[1])]
-    return spark.createDataFrame(
-        rows, schema="cluster int, pos int, coord_q6 long")
+    return local_frame(
+        spark, rows, "cluster int, pos int, coord_q6 long")
 
 
 _KMEANS_INT_ASSIGN_SQL = """
@@ -2667,7 +2668,8 @@ GROUP BY 1, 2
          "nested loop; word boundaries free from tokenization")
 def q_tag_keywords(spark, sf_dir):
     from .operators.text_analysis import tag_keywords
-    vocab = spark.createDataFrame(
+    vocab = local_frame(
+        spark,
         [("scan", "exec"), ("join", "exec"), ("window", "exec"),
          ("hash value", "exec"), ("spark", "engine"), ("vector", "ml"),
          ("stream", "engine")],
@@ -3451,9 +3453,9 @@ def q_bpe_merge_table(spark, sf_dir):
     from .operators.bpe import bpe_train
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     merges = bpe_train(docs, "text", num_merges=30)
-    return spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        schema="rank int, a string, b string")
+    return local_frame(
+        spark, [(i, a, b) for i, (a, b) in enumerate(merges)],
+        "rank int, a string, b string")
 
 
 def _bpe_vocab_sql(num_merges: int = 30) -> str:
@@ -5066,8 +5068,8 @@ def q_quality_lr_train(spark, sf_dir):
     # w is a collected list — frame fully consumed, release the cache
     frame.unpersist()
     names = ["intercept", "x_len", "x_the", "x_digit", "x_toklen"]
-    return spark.createDataFrame(
-        [(nm, round(wi, 6)) for nm, wi in zip(names, w)],
+    return local_frame(
+        spark, [(nm, round(wi, 6)) for nm, wi in zip(names, w)],
         "feature string, weight double")
 
 
@@ -5203,7 +5205,7 @@ def q_pca_covariance(spark, sf_dir):
     d = cov.shape[0]
     rows = [(i, j, round(float(cov[i, j]), 6))
             for i in range(d) for j in range(i, d)]
-    return spark.createDataFrame(rows, "i int, j int, cov double")
+    return local_frame(spark, rows, "i int, j int, cov double")
 
 
 def _pca_deflate_sql(k: int = 4, iters: int = 2, dp: int = 5) -> str:
@@ -9803,8 +9805,8 @@ def q_vocab_growth_curve(spark, sf_dir):
               .agg(F.min("doc_id").alias("first_doc"))
               .localCheckpoint(eager=False))
     spark_ = docs.sparkSession
-    cps = spark_.createDataFrame([(50,), (100,), (200,), (400,)],
-                                 "n_docs long")
+    cps = local_frame(spark_, [(50,), (100,), (200,), (400,)],
+                      "n_docs long")
     vocab = (cps.join(firsts, F.col("first_doc") < F.col("n_docs"))
              .groupBy("n_docs").agg(F.count("*").alias("vocab_size")))
     seen = (cps.join(toks, F.col("doc_id") < F.col("n_docs"))

@@ -79,9 +79,18 @@ def get_spark(app_name: str = "ai-incident-analyst-spark",
     # ~4x more scan tasks. A cluster master (SPARK_GRAFT_MASTER=yarn/
     # k8s/…) keeps Spark's 128m default — multi-file tables parallelize
     # on their own and smaller splits only inflate task counts there.
+    # Partition discovery is listed on the driver for the same masters:
+    # above the threshold (default 32 paths) Spark lists leaf directories
+    # in a distributed job, and a day-partitioned history table of 60+
+    # `__day=` directories paid a ~0.3 s, one-task-per-directory job on
+    # every read. On local[N] that job runs on the same cores the driver
+    # has, so it only adds scheduling; a cluster master keeps the
+    # default, where executors do list in parallel.
     if master.startswith("local"):
         b = b.config("spark.sql.files.maxPartitionBytes",
                      os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"))
+        b = b.config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                     "1000000")
     # Big-input shuffle fan-out, ENV-GATED, off by default
     # (tools/scaling_probe.py sets the same confs per-cell at runtime
     # for its sf>=1 cells; these envs serve other big-input entry

@@ -25,7 +25,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
+from pyspark.sql.types import StructType
 
 
 def write_clustered(df: DataFrame, path: str, partition_col: str,
@@ -125,6 +125,40 @@ def dynamic_partition_overwrite(spark):
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
+def read_partitions(spark, path: str, partition_col: str, values: list,
+                    schema: StructType | None = None) -> DataFrame | None:
+    """Read only the ``partition_col=value`` directories of the
+    ``partitionBy(partition_col)`` parquet table at ``path``, with
+    ``basePath`` so the partition column stays in the schema — instead of
+    listing the whole table and pruning it. ``values`` are in the string
+    form the partition writer casts them to (None is the null
+    partition); each is escaped into its directory name by the writer's
+    own rule (``ExternalCatalogUtils``). Values with no directory are
+    skipped; None when no directory exists, a missing table included.
+    Existence is probed through Spark's FS layer (os.path only sees the
+    local filesystem — the table may live on HDFS/S3).
+
+    ``schema`` (the full table schema, partition column included) skips
+    the schema-inference job and pins the partition column's type, which
+    inference over a subset of directories could change (``01`` alone
+    infers int)."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    dirs = []
+    for v in values:
+        d = jvm.org.apache.hadoop.fs.Path(
+            path, escape.getPartitionPathString(partition_col, v))
+        if d.getFileSystem(conf).exists(d):
+            dirs.append(d.toString())
+    if not dirs:
+        return None
+    reader = spark.read.option("basePath", path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*dirs)
+
+
 def merge_upsert(spark, path: str, updates: DataFrame,
                  key_cols: list[str], partition_col: str) -> None:
     """Delta-style MERGE (whole-row upsert by key) over a
@@ -137,9 +171,9 @@ def merge_upsert(spark, path: str, updates: DataFrame,
     matched keys are replaced, unmatched keys inserted, every other
     partition's files are untouched bytes on disk. The touched-partition
     list is collected to the driver (bounded by the batch's distinct
-    partition values — KB-scale) precisely because a static ``isin`` is
-    what the file-index pruner consumes at planning time. Updates whose
-    partition is new simply create its directory.
+    partition values — KB-scale) and ``read_partitions`` reads just those
+    directories, so the rest of the table is never even listed. Updates
+    whose partition has no directory are inserts: they simply create it.
 
     CONTRACT: ``partition_col`` must be a stable function of the key
     (the usual date-partitioned-fact invariant). An update that MOVES a
@@ -150,16 +184,12 @@ def merge_upsert(spark, path: str, updates: DataFrame,
     upsert batch touches days, not the table — cost scales with the
     batch's partition footprint.
     """
-    parts = [r[0] for r in
-             updates.select(partition_col).distinct().collect()]
+    # the string form the partition writer casts each value to
+    parts = [r[0] for r in updates.select(
+        F.col(partition_col).cast("string")).distinct().collect()]
     merged = updates
-    try:
-        # existence probe through Spark's FS layer (os.path only sees the
-        # local filesystem — this table may live on HDFS/S3)
-        existing = spark.read.parquet(path) \
-            .filter(F.col(partition_col).isin(parts))
-    except AnalysisException:
-        existing = None  # first write: nothing to merge against
+    existing = read_partitions(spark, path, partition_col, parts,
+                               updates.schema)
     if existing is not None:
         merged = existing.join(
             updates.select(*key_cols).distinct(), key_cols, "left_anti"

@@ -60,6 +60,7 @@ from ..operators.rag import (
     prompt_col,
     sorted_struct_array,
 )
+from ..operators.util import local_frame
 
 # knn_join and run_rag_batch are no longer called here; they stay bound
 # because perfbench/incident_loop.py wraps these names in its traced run
@@ -125,7 +126,8 @@ def process_incident_batch(batch: DataFrame, corpus: DataFrame,
            StructField("similar_logs", ArrayType(index.schema)),
            StructField("llm_output", StringType()),
            StructField("feedback", StructType.fromDDL(FEEDBACK_TYPE))])
-    entry = batch.sparkSession.createDataFrame(
+    entry = local_frame(
+        batch.sparkSession,
         [(*(got["first"][c] for c in _META), got["batch_logs"], similar,
           llm_out, None)], schema)
     # namespace_name rides along so the stored table feeds the dashboard

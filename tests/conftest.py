@@ -18,3 +18,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def jobs_of():
+    """``jobs_of(spark, fn)`` -> (fn's result, ids of the Spark jobs it
+    started), counted by a job group unique to the call."""
+    import itertools
+
+    seq = itertools.count()
+
+    def run(spark, fn):
+        sc = spark.sparkContext
+        group = f"jobs_of-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    return run

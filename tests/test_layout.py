@@ -155,3 +155,54 @@ def test_vacuum_partitions_hive_escaped_values(spark, tmp_path):
     left = {str(r["ts"]) for r in
             spark.read.parquet(p).select("ts").distinct().collect()}
     assert left == {"2024-01-01 00:00:00"}
+
+
+def test_merge_upsert_reads_escaped_partition_directories(spark, tmp_path):
+    """Partition values the writer escapes into their directory names
+    (a space, ':' and '/'): the merge reads exactly the touched
+    directories, replaces the matched key, and a value with no directory
+    is an insert."""
+    import os
+
+    from ai_incident_analyst_spark.sources.layout import (
+        merge_upsert,
+        read_partitions,
+    )
+
+    path = str(tmp_path / "dim")
+    schema = "k long, v string, ds string"
+    spark.createDataFrame(
+        [(1, "a", "day 1"), (2, "b", "day 1"), (3, "c", "d:2/x"),
+         (4, "d", "plain")], schema).write.partitionBy("ds").parquet(path)
+    assert {"ds=d%3A2%2Fx", "ds=day 1"} <= set(os.listdir(path))
+    before_plain = {f: os.path.getmtime(os.path.join(path, "ds=plain", f))
+                    for f in os.listdir(os.path.join(path, "ds=plain"))}
+
+    touched = read_partitions(spark, path, "ds", ["day 1", "d:2/x", "new"])
+    assert sorted((r.k, r.ds) for r in touched.collect()) == \
+        [(1, "day 1"), (2, "day 1"), (3, "d:2/x")]
+    assert all("ds=plain" not in f for f in touched.inputFiles())
+    assert read_partitions(spark, path, "ds", ["none here"]) is None
+    assert read_partitions(spark, str(tmp_path / "absent"), "ds",
+                           ["day 1"]) is None
+
+    updates = spark.createDataFrame(
+        [(2, "B2", "day 1"), (3, "C2", "d:2/x"), (7, "g", "new day")],
+        schema)
+    merge_upsert(spark, path, updates, ["k"], "ds")
+    got = {r.k: (r.v, r.ds) for r in spark.read.parquet(path).collect()}
+    assert got == {1: ("a", "day 1"), 2: ("B2", "day 1"),
+                   3: ("C2", "d:2/x"), 4: ("d", "plain"),
+                   7: ("g", "new day")}
+    assert {f: os.path.getmtime(os.path.join(path, "ds=plain", f))
+            for f in os.listdir(os.path.join(path, "ds=plain"))} \
+        == before_plain
+
+    # a value that partition inference alone would type as int keeps the
+    # table's string type: the read takes ``updates``' schema
+    merge_upsert(spark, path, spark.createDataFrame(
+        [(8, "h", "01")], schema), ["k"], "ds")
+    merge_upsert(spark, path, spark.createDataFrame(
+        [(8, "h2", "01")], schema), ["k"], "ds")
+    rows = spark.read.parquet(path).filter("k = 8").collect()
+    assert [(r.v, r.ds) for r in rows] == [("h2", "01")]

@@ -154,3 +154,122 @@ def test_upsert_feedback_on_disk_prunes_to_one_partition(spark, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters:" in plan and \
         "__day" in plan.split("PartitionFilters:")[1][:160], plan
+
+
+def _metrics_fixture(spark):
+    """Multi-day entries with NULL service/namespace/level (counted as
+    "unknown") and one NULL timestamp (its day group sorts first)."""
+    import pandas as pd
+
+    rows = [
+        ("2025-07-23T10:00:00Z", "svc-db", "prod", "error"),
+        ("2025-07-23T11:00:00Z", "svc-db", None, "warn"),
+        ("2025-07-24T09:00:00Z", None, "prod", None),
+        ("2025-07-25T08:00:00Z", "svc-oom", "stage", "error"),
+        ("2025-07-25T09:30:00Z", "svc-oom", "prod", "error"),
+        ("2025-07-25T23:59:59Z", None, None, None),
+        (None, "svc-net", "prod", "info"),
+    ]
+    cols = ["timestamp", "container_name", "namespace_name", "level"]
+    df = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+    return df, pd.DataFrame(rows, columns=cols)
+
+
+def _group_count(series):
+    return sorted(series.value_counts(dropna=False).items(),
+                  key=lambda kv: (kv[0] is not None, kv[0] or ""))
+
+
+def test_history_metrics_matches_pandas_group_counts(spark, jobs_of):
+    df, pdf = _metrics_fixture(spark)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    out, jobs = jobs_of(spark, lambda: {
+        k: v.collect() for k, v in history_metrics(df).items()})
+    assert len(jobs) <= 3, jobs
+
+    day = pdf.timestamp.str[:10].where(pdf.timestamp.notna(), None)
+    assert [(r.day, r["count"]) for r in out["by_day"]] == \
+        _group_count(day)
+    assert out["by_day"][0].day is None          # NULL day first
+    for view, col in (("by_service", "container_name"),
+                      ("by_namespace", "namespace_name"),
+                      ("by_level", "level")):
+        assert [(r[col], r["count"]) for r in out[view]] == \
+            _group_count(pdf[col].fillna("unknown")), view
+    # no cached frame left behind
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_history_metrics_views_keep_schema_and_are_local(spark, jobs_of):
+    df, _ = _metrics_fixture(spark)
+    m = history_metrics(df)
+    assert m["by_day"].schema.simpleString() == \
+        "struct<day:string,count:bigint>"
+    assert [f.nullable for f in m["by_day"].schema] == [True, False]
+    assert [f.nullable for f in m["by_level"].schema] == [False, False]
+    _, jobs = jobs_of(spark, lambda: [v.collect() for v in m.values()])
+    assert jobs == []                # a snapshot: reading a view is free
+
+
+def _day_table(spark, path, days):
+    from ai_incident_analyst_spark.operators.rag import (
+        append_history_partitioned,
+    )
+
+    rows = [Row(timestamp=f"2025-{d}T10:00:00Z", llm_output=f"rca{d}",
+                feedback=None) for d in days]
+    append_history_partitioned(spark.createDataFrame(
+        rows, "timestamp string, llm_output string, "
+              "feedback struct<vote:string,comment:string>"), path)
+
+
+def _tree(path):
+    import os
+
+    return {os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _, fs in os.walk(path) for f in fs}
+
+
+def test_upsert_feedback_on_disk_missing_day_is_noop(spark, tmp_path):
+    from ai_incident_analyst_spark.operators.rag import (
+        upsert_feedback_on_disk,
+    )
+
+    path = str(tmp_path / "history")
+    _day_table(spark, path, ["07-23", "07-24"])
+    before_files = _tree(path)
+    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    upsert_feedback_on_disk(spark, path, "2025-07-30T10:00:00Z", "up", "x")
+
+    assert _tree(path) == before_files
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+
+
+def test_history_day_reads_one_directory(spark, tmp_path, jobs_of):
+    """The feedback update's read is the one ``__day`` directory: every
+    input file lies under it, and with more day directories than Spark's
+    parallel-listing threshold no listing job (one task per directory)
+    runs."""
+    import datetime
+
+    from ai_incident_analyst_spark.operators.rag import history_day
+
+    path = str(tmp_path / "history")
+    days = [f"{m:02d}-{d:02d}" for m in (7, 8) for d in range(1, 21)]
+    _day_table(spark, path, days)
+    part = history_day(spark, path, "2025-07-05T10:00:00Z")
+    files = part.inputFiles()
+    assert files and all(f"{path}/__day=2025-07-05/" in f
+                         for f in files), files
+    assert [tuple(r) for r in part.select("timestamp", "__day").collect()] \
+        == [("2025-07-05T10:00:00Z", datetime.date(2025, 7, 5))]
+    assert history_day(spark, path, "2025-09-01T00:00:00Z") is None
+
+    # a whole-table read lists its 40 directories on the driver
+    tracker = spark.sparkContext.statusTracker()
+    _, jobs = jobs_of(spark, lambda: spark.read.parquet(path).count())
+    tasks = [tracker.getStageInfo(s).numTasks for j in jobs
+             for s in tracker.getJobInfo(j).stageIds]
+    assert len(days) not in tasks, tasks
