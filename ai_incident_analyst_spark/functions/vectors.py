@@ -4,9 +4,9 @@ Reference parity: squared-L2 distance implicit in FAISS ``IndexFlatL2``
 (src/vector_db/faiss_db.py:43,54); float32 casts (faiss_db.py:40,53).
 
 These are pure Catalyst expressions (zip_with/aggregate), so distance
-evaluation happens JVM-side with no Python boundary. For large batched
-matrix work the knn operator also offers an Arrow/numpy fast path
-(operators/knn.py) — same math, BLAS-backed.
+evaluation happens JVM-side with no Python boundary. Exact top-k search
+does not use them: ``operators/knn.py:knn_join`` scores with one
+BLAS-backed numpy kernel (``block_topk``) — same math.
 
 All math is done in double: float32 accumulation order differences
 would make results nondeterministic across partitionings.

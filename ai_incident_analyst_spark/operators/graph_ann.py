@@ -44,52 +44,52 @@ def build_knn_graph(df: DataFrame, id_col: str, vec_col: str,
     cosine-similar OTHER nodes, ``sim`` rounded to ``round_dp`` before
     the rank (ties by dst id) so the edge set reproduces cross-engine.
 
-    n² reference build, blocked-matmul form (the ``knn_join_blocked``
-    recipe): the node matrix is broadcast once, each partition computes
-    its rows' cosines against it with ONE BLAS matmul and emits its own
-    top-k — no crossJoin row explosion, no shuffle, no window (measured
-    10.0 s → 0.6 s at 2000×64 vs the expression-based crossJoin+window
-    form, whose higher-order-function cosine never enters codegen).
-    Scores round to 6dp BEFORE the per-row selection (dst tie-breaks
-    via lexsort), so the edge set still reproduces cross-engine. See
-    the module docstring for the 100 TB candidate-generation
-    alternatives that share this output schema.
+    n² reference build on the one exact kernel (``knn.block_topk``): the
+    node matrix, sorted by id, is broadcast once; each partition scores
+    its rows against it with ONE BLAS matmul, keeps its top-(k+1) and
+    drops the self edge — no crossJoin row explosion, no shuffle, no
+    window (measured 10.0 s → 0.6 s at 2000×64 vs the expression-based
+    crossJoin+window form, whose higher-order-function cosine never
+    enters codegen). See the module docstring for the 100 TB
+    candidate-generation alternatives that share this output schema.
     """
     from typing import Iterator
 
     import numpy as np
     import pandas as pd
 
+    from .knn import block_topk
+    from .util import spread
+
     rows = (df.select(F.col(id_col).alias("i"),
                       F.col(vec_col).cast("array<double>").alias("v"))
             .collect())
     ids = np.array([r["i"] for r in rows])
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((ids, unit))
+    # sorted by id: block_topk's stable argsort then breaks ties by id
+    order = np.argsort(ids, kind="stable")
+    bc = df.sparkSession.sparkContext.broadcast(
+        (ids[order], np.array([r["v"] for r in rows],
+                              dtype=np.float64)[order]))
     id_type = df.select(id_col).schema.fields[0].dataType.simpleString()
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cids, cunit = bc.value
+        cids, cmat = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            m = np.array(list(pdf["__v"]), dtype=np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = np.round(m @ cunit.T, round_dp)
             src_ids = pdf["__i"].to_numpy()
-            out_s, out_d, out_v = [], [], []
-            for r, sid in enumerate(src_ids):
-                srow = sims[r].copy()
-                srow[cids == sid] = -np.inf          # exclude self
-                order = np.lexsort((cids, -srow))[:k]
-                out_s.extend([sid] * len(order))
-                out_d.extend(cids[order])
-                out_v.extend(srow[order])
-            yield pd.DataFrame({"src": out_s, "dst": out_d, "sim": out_v})
+            idx, sim = block_topk(
+                np.array(list(pdf["__v"]), dtype=np.float64), cmat, k + 1,
+                "cosine", round_dp)
+            dst = cids[idx]
+            # the first k non-self hits: with more than k+1 identical
+            # vectors the self edge may fall outside the top-(k+1)
+            other = dst != src_ids[:, None]
+            keep = other & (np.cumsum(other, axis=1) <= k)
+            yield pd.DataFrame({
+                "src": np.repeat(src_ids, idx.shape[1])[keep.ravel()],
+                "dst": dst[keep], "sim": sim[keep]})
 
-    from .util import spread
     prepped = spread(
         df.select(F.col(id_col).alias("__i"),
                   F.col(vec_col).cast("array<double>").alias("__v")),
@@ -236,14 +236,15 @@ def nn_descent_graph(df: DataFrame, id_col: str, vec_col: str,
     top-k — no window needed), dst vectors ride the candidate row from
     one equi-join, src vectors arrive via the cogroup's other side
     (blocked by the same hash of ``id``), and each block scores in one
-    vectorized numpy pass. Rounding is HALF-AWAY-FROM-ZERO
-    (``sign(x)·floor(|x|·s + 0.5)/s`` — cosine may be negative),
-    matching Spark ``F.round`` / the DuckDB twin exactly like the
-    ``knn.py`` cogroup kernel; ties break by dst via a stable lexsort,
-    identical to the window's ``ORDER BY sim DESC, dst``.
+    vectorized numpy pass. Rounding is ``knn.round_half_away``
+    (half away from zero, matching Spark ``F.round`` / the DuckDB twin);
+    ties break by dst via a stable lexsort, identical to the window's
+    ``ORDER BY sim DESC, dst``.
     """
     import numpy as np
     import pandas as pd
+
+    from .knn import round_half_away
 
     v = df.select(F.col(id_col).alias("id"),
                   F.col(vec_col).cast("array<double>").alias("x"))
@@ -254,7 +255,6 @@ def nn_descent_graph(df: DataFrame, id_col: str, vec_col: str,
     nblk = df.sparkSession.sparkContext.defaultParallelism
     vblk = v.withColumn("__blk", F.pmod(F.xxhash64(F.col("id")),
                                         F.lit(nblk)))
-    scale = 10.0 ** round_dp
 
     def score_block(_key, vec_pdf, cand_pdf):
         if len(cand_pdf) == 0 or len(vec_pdf) == 0:
@@ -267,15 +267,9 @@ def nn_descent_graph(df: DataFrame, id_col: str, vec_col: str,
         dst = cand_pdf["dst"].to_numpy()
         A = vmat_s[np.searchsorted(vid_s, src)]
         B = np.array(list(cand_pdf["__bx"]), dtype=np.float64)
-        sim = (A * B).sum(axis=1) / (
-            np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1)))
-        # half-away-from-zero at round_dp (Spark F.round / DuckDB round;
-        # NOT np.round's half-even) — cosine is signed, so the knn.py
-        # non-negative floor(x·s+0.5) form gets a sign wrapper; + 0.0
-        # turns the -0.0 it gives for sims in (-0.5e-6, 0) into +0.0,
-        # as Spark's and DuckDB's round do
-        sim = np.sign(sim) * np.floor(np.abs(sim) * scale + 0.5) / scale \
-            + 0.0
+        sim = round_half_away((A * B).sum(axis=1) / (
+            np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1))),
+            round_dp)
         order = np.lexsort((dst, -sim, src))
         src_o, dst_o, sim_o = src[order], dst[order], sim[order]
         starts = np.flatnonzero(np.r_[True, src_o[1:] != src_o[:-1]])

@@ -5,25 +5,18 @@ Reference parity: exact brute-force squared-L2 top-k per query, k=5
 ``src/llm/llm_processor.py:48-52``); the positional id→metadata join J1
 (``faiss_db.py:56-58``) becomes a plain equi-join on ``vec_id``.
 
-Two physical strategies, same semantics:
-
-``knn_join``
-    Declarative: broadcast(queries) × corpus cross join, distance as a
-    Catalyst higher-order expression, per-query top-k via window. Right
-    when |Q| is small (the reference uses ≤5 queries per batch,
-    ``main.py:57``). The cross join is broadcast-nested-loop — no shuffle
-    of the corpus at all; the only shuffle is the tiny top-k window keyed
-    by query id.
-
-``knn_join_blocked``
-    Scale path: queries collected to a numpy matrix (must fit driver —
-    fine for ≤~1e5 queries × small dim), broadcast to executors;
-    ``mapInPandas`` over corpus partitions computes a BLAS block matmul
-    ‖q−c‖² = ‖q‖²+‖c‖²−2q·cᵀ and emits only each partition's LOCAL top-k
-    per query (the "partial aggregation" trick: the final window sees at
-    most #partitions·k candidates per query, not the whole corpus).
-    At 1000 executors × 100 TB corpus this is embarrassingly parallel
-    with a negligible final shuffle. Beyond that: external ANN [ext].
+One exact strategy, one kernel. ``knn_join`` collects the queries to a
+numpy matrix on the driver (they must fit there — fine for ≤~1e5
+queries × small dim; the reference uses ≤5 per batch, ``main.py:57``)
+and broadcasts it; ``mapInPandas`` over corpus partitions scores each
+Arrow batch with ``block_topk`` — one BLAS matmul
+‖q−c‖² = ‖q‖²+‖c‖²−2q·cᵀ (or q·c over the norms) — and emits only that
+partition's LOCAL top-k per query. The final window sees at most
+#partitions·k candidates per query, not the whole corpus (the "partial
+aggregation" trick): at 1000 executors × 100 TB corpus this is
+embarrassingly parallel with a negligible final shuffle. Beyond that:
+the IVF / PQ / LSH approximate joins below, or an external ANN [ext].
+Every exact top-k in the package scores through ``block_topk``.
 """
 
 from __future__ import annotations
@@ -40,12 +33,53 @@ from .util import local_frame, spread
 _METRICS = ("l2_sq", "cosine")
 
 
-def _score_col(metric: str, qv: str, cv: str):
+def round_half_away(x, dp: int):
+    """Round to ``dp`` decimals, halves away from zero, ``-0.0`` → ``+0.0``
+    — as Spark's ``F.round`` and DuckDB's ``round`` do, NOT ``np.round``'s
+    half-to-even: a score exactly on a half at ``dp`` must rank the same
+    engine-vs-twin (r13, ADVICE)."""
+    import numpy as np
+
+    scale = 10.0 ** dp
+    return np.sign(x) * np.floor(np.abs(x) * scale + 0.5) / scale + 0.0
+
+
+def block_topk(qmat, cmat, k: int, metric: str = "l2_sq",
+               round_dp: int | None = None):
+    """Exact top-k of every query row against one block of corpus rows.
+
+    ``qmat`` is (nq, d) and ``cmat`` (nc, d), both float64. Scores come
+    from one BLAS matmul: ‖q−c‖² = ‖q‖²+‖c‖²−2q·cᵀ for ``l2_sq``
+    (clamped at +0.0, so identical vectors never score negative), q·c
+    over the norms for ``cosine``. ``round_dp`` rounds the scores with
+    ``round_half_away`` BEFORE the selection (the repo-wide
+    round-then-rank contract). Returns ``(idx, score)``, both
+    (nq, min(k, nc)): column indices into ``cmat``, best first, and
+    their scores. Ties keep ``cmat``'s row order (stable argsort), so a
+    block sorted by id breaks ties by id ascending. A zero-norm vector
+    scores NaN under cosine and ranks last.
+    """
+    import numpy as np
+
+    if metric not in _METRICS:
+        raise ValueError(f"metric must be one of {_METRICS}")
+    qnorm2 = (qmat * qmat).sum(axis=1)
+    cnorm2 = (cmat * cmat).sum(axis=1)
+    dot = qmat @ cmat.T  # (nq, nc) — BLAS
     if metric == "l2_sq":
-        return l2_sq(qv, cv), F.col("distance").asc()
-    if metric == "cosine":
-        return cosine_similarity(qv, cv), F.col("distance").desc()
-    raise ValueError(f"metric must be one of {_METRICS}")
+        # + 0.0: np.maximum keeps a -0.0 score; NaN passes through
+        score = np.maximum(qnorm2[:, None] + cnorm2[None, :] - 2.0 * dot,
+                           0.0) + 0.0
+    else:
+        with np.errstate(divide="ignore", invalid="ignore"):
+            score = dot / (np.sqrt(qnorm2)[:, None]
+                           * np.sqrt(cnorm2)[None, :])
+    if round_dp is not None:
+        score = round_half_away(score, round_dp)
+    key = score if metric == "l2_sq" else -score
+    kk = min(k, score.shape[1])
+    idx = np.argsort(key, axis=1, kind="stable")[:, :kk]
+    return idx, np.take_along_axis(score, idx, axis=1)
 
 
 def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -59,115 +93,79 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     (ascending best) or cosine similarity (descending best). Ties broken
     by corpus id for determinism (FAISS breaks ties by insertion order,
     faiss_db.py:56; an explicit id is the distributed equivalent).
-    ``round_dp`` rounds the score BEFORE the top-k window per the
-    repo-wide round-then-rank discretization contract, so exact-duplicate
-    vectors (float-noise ties) rank identically across engines.
-    """
-    q = F.broadcast(queries.select(F.col(query_id).alias("query_id"),
-                                   F.col(query_vec).alias("__qv")))
-    c = corpus.select(F.col(corpus_id).alias("vec_id"),
-                      F.col(corpus_vec).alias("__cv"))
-    score, order = _score_col(metric, "__qv", "__cv")
-    if round_dp is not None:
-        score = F.round(score, round_dp)
-    scored = q.crossJoin(c).withColumn("distance", score)
-    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "vec_id", "distance")
-    )
+    ``round_dp`` rounds the score BEFORE the top-k per the repo-wide
+    round-then-rank discretization contract, so exact-duplicate vectors
+    (float-noise ties) rank identically across engines.
 
-
-def block_topk(qmat, cmat, k: int, metric: str = "l2_sq"):
-    """Exact top-k of every query row against one block of corpus rows.
-
-    ``qmat`` is (nq, d) and ``cmat`` (nc, d), both float64. Scores come
-    from one BLAS matmul: ‖q−c‖² = ‖q‖²+‖c‖²−2q·cᵀ for ``l2_sq``, q·c
-    over the norms for ``cosine``. Returns ``(idx, score)``, both
-    (nq, min(k, nc)): column indices into ``cmat``, best first, and
-    their scores. Ties keep ``cmat``'s row order (stable argsort), so a
-    block sorted by id breaks ties by id ascending, like ``knn_join``.
-    A zero-norm vector scores NaN under cosine and ranks last; the same
-    input makes ``knn_join`` raise DIVIDE_BY_ZERO under ANSI mode.
+    The queries are collected when this is called (one job). Dirty rows
+    never reach the output: a query with a NULL vector and a corpus row
+    whose vector is NULL or not the queries' length are dropped, and
+    under cosine so is a zero-norm vector on either side (its score is
+    NaN). Queries of mixed lengths raise ``ValueError``.
     """
     import numpy as np
 
     if metric not in _METRICS:
         raise ValueError(f"metric must be one of {_METRICS}")
-    qnorm2 = (qmat * qmat).sum(axis=1)
-    cnorm2 = (cmat * cmat).sum(axis=1)
-    dot = qmat @ cmat.T  # (nq, nc) — BLAS
-    if metric == "l2_sq":
-        score = qnorm2[:, None] + cnorm2[None, :] - 2.0 * dot
-        key = score
-    else:
-        with np.errstate(divide="ignore", invalid="ignore"):
-            score = dot / (np.sqrt(qnorm2)[:, None]
-                           * np.sqrt(cnorm2)[None, :])
-        key = -score
-    kk = min(k, score.shape[1])
-    idx = np.argsort(key, axis=1, kind="stable")[:, :kk]
-    return idx, np.take_along_axis(score, idx, axis=1)
-
-
-def knn_join_blocked(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                     metric: str = "l2_sq",
-                     query_id: str = "query_id", query_vec: str = "query_vec",
-                     corpus_id: str = "vec_id", corpus_vec: str = "embedding") -> DataFrame:
-    """Blocked-matmul exact k-NN: numpy per partition, partial top-k.
-
-    Same result as ``knn_join`` (exact, same tie-break); physical plan
-    trades the Catalyst expression for one Arrow pass over the corpus with
-    BLAS matmuls and a per-partition top-k (``block_topk``), then a final
-    global top-k over #partitions·k candidates per query.
-    """
-    import numpy as np
-
-    if metric not in _METRICS:
-        raise ValueError(f"metric must be one of {_METRICS}")
-
-    qrows = queries.select(F.col(query_id).alias("qid"),
-                           F.col(query_vec).cast("array<double>").alias("qv")).collect()
-    # no forced dtype: ids keep their native type (long or string)
-    qids = np.array([r["qid"] for r in qrows])
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)  # (nq, d)
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, qmat))
-    want_max = metric == "cosine"
 
     qtype = queries.schema[query_id].dataType.simpleString()
     ctype_id = corpus.schema[corpus_id].dataType.simpleString()
     out_schema = f"query_id {qtype}, vec_id {ctype_id}, distance double"
+    # dirty rows are dropped here and in ``part``, not by a Spark filter:
+    # a filter on a vector that a Python UDF computes makes Catalyst
+    # evaluate that UDF twice
+    qrows = [r for r in queries.select(
+        F.col(query_id).alias("qid"),
+        F.col(query_vec).cast("array<double>").alias("qv")).collect()
+        if r["qv"] is not None]
+    dims = {len(r["qv"]) for r in qrows}
+    if len(dims) > 1:
+        raise ValueError(
+            f"knn_join: query vectors have mixed lengths {sorted(dims)}")
+    if not qrows:
+        return local_frame(corpus.sparkSession, [], out_schema)
+    # no forced dtype: ids keep their native type (long or string)
+    qids = np.array([r["qid"] for r in qrows])
+    qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)  # (nq, d)
+    bq = corpus.sparkSession.sparkContext.broadcast((qids, qmat))
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, qmat_ = bq.value
         for pdf in batches:
+            pdf = pdf[np.fromiter(
+                (v is not None and len(v) == qmat_.shape[1]
+                 for v in pdf[corpus_vec]), bool, len(pdf))]
             if len(pdf) == 0:
                 continue
             cid = pdf[corpus_id].to_numpy()
-            cmat = np.array(list(pdf[corpus_vec]), dtype=np.float64)  # (nc, d)
-            idx, top = block_topk(qmat_, cmat, k, metric)
+            cmat = np.array(list(pdf[corpus_vec]), dtype=np.float64)
+            idx, top = block_topk(qmat_, cmat, k, metric, round_dp)
+            keep = ~np.isnan(top).ravel()  # NaN ranks last: lossless
             yield pd.DataFrame({
-                "query_id": np.repeat(qids_, idx.shape[1]),
-                "vec_id": cid[idx].ravel(),
-                "distance": top.ravel(),
+                "query_id": np.repeat(qids_, idx.shape[1])[keep],
+                "vec_id": cid[idx].ravel()[keep],
+                "distance": top.ravel()[keep],
             })
 
-    # corpus rows sorted by id within partition → stable argsort breaks
-    # ties by vec_id, matching knn_join's ordering
+    # corpus rows sorted by id within partition → the stable argsort in
+    # block_topk breaks ties by vec_id, like the final window
     cand = (
         spread(corpus.select(corpus_id, corpus_vec), corpus_id)
         .sortWithinPartitions(corpus_id)
         .mapInPandas(part, schema=out_schema)
     )
-    order = F.col("distance").desc() if want_max else F.col("distance").asc()
+    order = (F.col("distance").desc() if metric == "cosine"
+             else F.col("distance").asc())
     w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id").asc())
     return (
         cand.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .select("query_id", "vec_id", "distance")
     )
+
+
+#: the blocked kernel's former name, kept for importers
+knn_join_blocked = knn_join
 
 
 def _centroid_arrays(centroids: DataFrame, centroid_id: str,
@@ -1069,9 +1067,9 @@ def mutual_knn_pairs(df: DataFrame, id_col: str, vec_col: str,
     SemDeDup-style curation).
 
     Built from the exact ``knn_join`` of the corpus against itself
-    (self-matches excluded before ranking by taking k+1 and dropping
-    the self edge): one broadcast-scored pass, then the directed edge
-    list joins ITSELF on the reversed pair — edge-list-sized work, no
+    (self-matches excluded by taking k+1 and dropping the self edge):
+    one blocked scoring pass, then the directed edge list joins ITSELF
+    on the reversed pair — edge-list-sized work, no
     second scoring pass. ``round_dp`` rounds scores BEFORE the
     top-(k+1) ranking (passed through to ``knn_join``) per the repo
     round-then-rank discretization contract, matching
@@ -1089,7 +1087,7 @@ def mutual_knn_pairs(df: DataFrame, id_col: str, vec_col: str,
              .where(F.col("query_id") != F.col("vec_id")))
     # the edge list feeds both sides of the mutuality semi-join; cut
     # lineage so the scoring pass runs once, not once per reference
-    # (it is n·k rows — tiny next to the scored cross product)
+    # (it is n·k rows — tiny next to the scoring pass)
     edges = edges.localCheckpoint(eager=False)
     back = edges.select(F.col("query_id").alias("vec_id"),
                         F.col("vec_id").alias("query_id"))
@@ -1147,49 +1145,28 @@ def mutual_knn_pairs_ivf(df: DataFrame, id_col: str, vec_col: str,
         base.select(F.col("vec_id").alias("query_id"),
                     F.col("__cv").alias("__qv")),
         "__qv", ids, mat, n=nprobe, cell_type=ctype, round_dp=round_dp)
-    # Per-cell BLAS scoring with LOCAL top-(k+1) (r12): the first cut
-    # scored candidates with a row-wise Catalyst array expression after
-    # the cell equi-join — interpreted higher-order functions at
-    # ~1-2 µs/row over Σ|probers|·|members| rows, 78M rows / >200 s at
-    # sf10 under the trained quantizer. Here the two sides COGROUP by
-    # cell and each cell scores in ONE numpy matmul, keeping only each
-    # prober's local top-(k+1) — the global window then ranks
-    # ≤ nprobe·(k+1) candidates per query instead of the full candidate
-    # set (78M → ~2M rows at sf10). Local-then-global top-k is exact:
-    # every global top-(k+1) edge is inside its own cell's local
-    # top-(k+1) under the same (distance, vec_id) order. Scores use the
-    # ||q||²+||c||²−2q·c identity rounded at round_dp BEFORE selection
-    # — the same discretization-absorbs-ulps contract as assign_cells
-    # (clustering.py module docstring states the accepted residual
-    # class); members arrive sorted by vec_id so the stable argsort
-    # tie-breaks by id exactly like the SQL twin's ORDER BY.
+    # Each cell is one ``block_topk`` call, scores rounded at round_dp
+    # BEFORE selection (the discretization-absorbs-ulps contract of
+    # assign_cells; clustering.py's module docstring states the accepted
+    # residual class); members arrive sorted by vec_id so the stable
+    # argsort tie-breaks by id exactly like the SQL twin's ORDER BY.
     qt = df.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {qt}, vec_id {qt}, distance double"
-    kk_keep = k + 1
 
     def score_cell(_key, probe_pdf, member_pdf):
         if len(probe_pdf) == 0 or len(member_pdf) == 0:
             return pd.DataFrame(
                 {"query_id": [], "vec_id": [], "distance": []})
         member_pdf = member_pdf.sort_values("vec_id")
-        Q = np.array(list(probe_pdf["__qv"]), dtype=np.float64)
-        C = np.array(list(member_pdf["__cv"]), dtype=np.float64)
-        d2 = ((Q * Q).sum(axis=1)[:, None]
-              + (C * C).sum(axis=1)[None, :] - 2.0 * (Q @ C.T))
-        if round_dp is not None:
-            # HALF-UP (floor(x*s+0.5)/s — exact for the non-negative d²
-            # here), matching Spark F.round / the DuckDB twin's
-            # half-away-from-zero, NOT np.round's banker's half-even:
-            # a d² landing exactly on a half-ulp at round_dp must rank
-            # identically engine-vs-twin (r13, ADVICE).
-            scale = 10.0 ** round_dp
-            d2 = np.floor(d2 * scale + 0.5) / scale
-        kk = min(kk_keep, d2.shape[1])
-        idx = np.argsort(d2, axis=1, kind="stable")[:, :kk]
+        idx, top = block_topk(
+            np.array(list(probe_pdf["__qv"]), dtype=np.float64),
+            np.array(list(member_pdf["__cv"]), dtype=np.float64),
+            k + 1, "l2_sq", round_dp)
         return pd.DataFrame({
-            "query_id": np.repeat(probe_pdf["query_id"].to_numpy(), kk),
+            "query_id": np.repeat(probe_pdf["query_id"].to_numpy(),
+                                  idx.shape[1]),
             "vec_id": member_pdf["vec_id"].to_numpy()[idx].ravel(),
-            "distance": np.take_along_axis(d2, idx, axis=1).ravel(),
+            "distance": top.ravel(),
         })
 
     scored = (probers.groupBy("__cell")

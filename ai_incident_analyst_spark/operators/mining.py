@@ -30,10 +30,10 @@ Semantics (the sentence-transformers contract, restated relationally):
 Physical plan, and why it holds at 100 TB: the query set is
 fixed-cardinality training input → broadcast; the corpus is scanned
 once by a broadcast-nested-loop scoring pass and never shuffled before
-the per-query top-k window (same shape as ``operators/knn.py:knn_join``
-— swap in ``knn_join_blocked``'s partial-top-k Arrow pass when |Q|·|C|
-grows past the expression path, the semantics here only need the scored
-frame). The positive exclusion is a broadcast anti-join (positives ≪
+the per-query top-k window (``operators/knn.py:knn_join`` instead scores
+with a partial-top-k Arrow pass; it returns only the top-k, while the
+semantics here need the scored frame for the exclusions and margin).
+The positive exclusion is a broadcast anti-join (positives ≪
 corpus); the margin anchor is a per-query 1-row aggregate joined back
 broadcast. Only the final window shuffles, keyed by query id over
 candidate rows, not the corpus.

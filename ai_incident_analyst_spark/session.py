@@ -37,8 +37,13 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply engine-required confs to an existing session (driver-owned)."""
+    """Apply engine-required confs to an existing session (driver-owned),
+    and put the package on its Python workers' path once, so UDFs run
+    from any working directory (a cluster master must also ship it)."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -46,6 +51,10 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             # a conf may be non-modifiable on some builds; reads that need it
             # will fail loudly later, which is the correct signal.
             pass
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT] + paths)
     return spark
 
 

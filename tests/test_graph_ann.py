@@ -42,6 +42,23 @@ def test_build_knn_graph_matches_numpy(spark, vecs):
         assert got[i] == [j for _, j in sims[:3]], i
 
 
+def test_build_knn_graph_many_identical_vectors(spark):
+    """Seven copies of one vector (more than k+1 = 4): the self edge can
+    fall outside a node's top-(k+1), yet every node still gets exactly
+    k non-self edges, ties broken by dst id."""
+    rng = np.random.default_rng(5)
+    vecs = np.vstack([np.tile([1.0, 2.0, 3.0], (7, 1)),
+                      rng.normal(size=(5, 3))])
+    got = {}
+    for r in build_knn_graph(_vecs_df(spark, vecs), "vec_id", "embedding",
+                             k=3).collect():
+        got.setdefault(r["src"], []).append((r["dst"], r["sim"]))
+    for i in range(len(vecs)):
+        assert len(got[i]) == 3 and all(d != i for d, _ in got[i]), i
+    for i in range(7):
+        assert sorted(got[i]) == [(j, 1.0) for j in range(7) if j != i][:3]
+
+
 def _py_walk(vecs, graph, qv, entry, hops, beam, k):
     scored = {i: round(_cos(v, qv), 6) for i, v in enumerate(vecs)}
     visited, frontier = [entry], [entry]

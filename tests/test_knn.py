@@ -1,5 +1,11 @@
 """k-NN join tests: numpy exact reference (SURVEY.md §5 self-oracle),
-blocked path equivalence, IVF recall."""
+dirty input, the block kernel's rounding, IVF recall."""
+
+import itertools
+import math
+import os
+import subprocess
+import sys
 
 import numpy as np
 import pytest
@@ -7,24 +13,26 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ai_incident_analyst_spark.operators.knn import (
+    block_topk,
     ivf_knn_join,
     knn_join,
-    knn_join_blocked,
+    round_half_away,
 )
 from ai_incident_analyst_spark.sources.tables import load_table
 
 K = 5
 
 
-def _numpy_knn(qids, qmat, cids, cmat, k, metric):
+def _numpy_knn(qids, qmat, cids, cmat, k, metric, round_dp=None):
     out = {}
     for qi, qv in zip(qids, qmat):
         if metric == "l2_sq":
             d = ((cmat - qv) ** 2).sum(axis=1)
-            order = np.lexsort((cids, d))
         else:
             d = (cmat @ qv) / (np.linalg.norm(cmat, axis=1) * np.linalg.norm(qv))
-            order = np.lexsort((cids, -d))
+        if round_dp is not None:
+            d = np.array([round(x, round_dp) for x in d])
+        order = np.lexsort((cids, d if metric == "l2_sq" else -d))
         out[qi] = [(int(cids[i]), float(d[i])) for i in order[:k]]
     return out
 
@@ -43,25 +51,127 @@ def vec_data(spark, sf_dir):
     return q, c, ids[qmask], mat[qmask], ids[~qmask], mat[~qmask]
 
 
+@pytest.fixture(scope="module")
+def dup_data(spark):
+    """Every corpus vector four times under ids 12 apart, over three
+    partitions: each query's four best hits tie, broken by id only."""
+    rng = np.random.default_rng(7)
+    base = np.round(rng.normal(size=(12, 6)), 2)
+    cids = np.arange(48)
+    cmat = base[cids % 12]
+    qmat = base[:3] + 0.01
+    q = spark.createDataFrame(
+        [(int(i), v.tolist()) for i, v in enumerate(qmat)],
+        "query_id long, query_vec array<double>")
+    c = spark.createDataFrame(
+        [(int(i), v.tolist()) for i, v in zip(cids, cmat)],
+        "vec_id long, embedding array<double>").repartition(3)
+    return q, c, np.arange(3), qmat, cids, cmat
+
+
 @pytest.mark.parametrize("metric", ["l2_sq", "cosine"])
-def test_knn_matches_numpy(spark, vec_data, metric):
-    q, c, qids, qmat, cids, cmat = vec_data
-    got = {}
-    for r in knn_join(q, c, k=K, metric=metric).collect():
-        got.setdefault(r.query_id, []).append((r.vec_id, r.distance))
-    expect = _numpy_knn(qids, qmat, cids, cmat, K, metric)
-    for qi in expect:
-        assert [g[0] for g in got[qi]] == [e[0] for e in expect[qi]]
-        for (gv, gd), (ev, ed) in zip(got[qi], expect[qi]):
-            assert abs(gd - ed) < 1e-9
+def test_knn_matches_numpy(request, metric):
+    for data, round_dp in itertools.product(("vec_data", "dup_data"),
+                                            (None, 6)):
+        q, c, qids, qmat, cids, cmat = request.getfixturevalue(data)
+        got = {}
+        for r in knn_join(q, c, k=K, metric=metric,
+                          round_dp=round_dp).collect():
+            got.setdefault(r.query_id, []).append((r.vec_id, r.distance))
+        expect = _numpy_knn(qids, qmat, cids, cmat, K, metric, round_dp)
+        assert set(got) == set(expect), (data, round_dp)
+        for qi in expect:
+            got[qi].sort(key=lambda t: (
+                t[1] if metric == "l2_sq" else -t[1], t[0]))
+            assert [g[0] for g in got[qi]] == [e[0] for e in expect[qi]], \
+                (data, round_dp, qi)
+            for (gv, gd), (ev, ed) in zip(got[qi], expect[qi]):
+                assert abs(gd - ed) < 1e-9
 
 
-def test_blocked_equals_declarative(spark, vec_data):
-    q, c, *_ = vec_data
-    a = sorted(map(tuple, knn_join(q, c, k=K).collect()))
-    b = sorted(map(tuple, knn_join_blocked(q, c, k=K).collect()))
-    assert [(x[0], x[1]) for x in a] == [(x[0], x[1]) for x in b]
-    assert all(abs(x[2] - y[2]) < 1e-9 for x, y in zip(a, b))
+def test_round_half_away_and_block_topk_scores():
+    assert list(round_half_away(np.array([0.5, -0.5, 2.5]), 0)) == \
+        [1.0, -1.0, 3.0]
+    assert np.round(2.5) == 2.0  # the half-to-even rule it replaces
+    z = round_half_away(np.array([-1e-9]), 6)[0]
+    assert z == 0.0 and not np.signbit(z)
+    # the ‖q‖²+‖c‖²−2q·c identity puts some self scores below zero here
+    rng = np.random.default_rng(0)
+    m = rng.normal(size=(40, 9)) * 1e3
+    n2 = (m * m).sum(axis=1)
+    assert (np.diag(n2[:, None] + n2[None, :] - 2.0 * m @ m.T) < 0).any()
+    _, full = block_topk(m, m, 40, "l2_sq")
+    assert (full >= 0.0).all() and not np.signbit(full).any()
+    idx, top = block_topk(m, m, 1, "l2_sq", round_dp=6)
+    assert (idx[:, 0] == np.arange(40)).all()
+    assert (top == 0.0).all() and not np.signbit(top).any()
+
+
+def _dirty_corpus(spark):
+    return spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, None), (3, [1.0, 0.0]),
+         (4, [0.0, 0.0, 0.0]), (5, [0.5, 0.5, 0.0]), (6, [0.0, 1.0, 0.0]),
+         (7, [1.0, 0.0, 0.0, 0.0])],
+        "vec_id long, embedding array<double>").repartition(2)
+
+
+@pytest.mark.parametrize("metric", ["l2_sq", "cosine"])
+def test_knn_drops_dirty_rows(spark, metric):
+    """NULL query vectors and NULL / wrong-length corpus vectors are
+    dropped under both metrics, and zero-norm vectors on either side
+    under cosine: no NULL or NaN distance, no dropped row in the
+    output."""
+    q = spark.createDataFrame(
+        [(10, [0.9, 0.1, 0.0]), (11, [0.0, 0.0, 0.0]), (12, None)],
+        "query_id long, query_vec array<double>")
+    rows = knn_join(q, _dirty_corpus(spark), k=10, metric=metric).collect()
+    assert all(r.distance is not None and not math.isnan(r.distance)
+               for r in rows)
+    bad = {2, 3, 7} | ({4} if metric == "cosine" else set())
+    assert not {r.vec_id for r in rows} & bad
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r.query_id, []).append(r.vec_id)
+    if metric == "cosine":
+        assert set(by_q) == {10} and sorted(by_q[10]) == [1, 5, 6]
+    else:
+        assert {k: sorted(v) for k, v in by_q.items()} == \
+            {10: [1, 4, 5, 6], 11: [1, 4, 5, 6]}
+
+
+def test_knn_empty_queries_and_mixed_lengths(spark):
+    c = _dirty_corpus(spark)
+    empty = spark.createDataFrame([], "query_id long, query_vec array<double>")
+    out = knn_join(empty, c, k=3)
+    assert out.collect() == []
+    assert out.columns == ["query_id", "vec_id", "distance"]
+    mixed = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0])],
+        "query_id long, query_vec array<double>")
+    with pytest.raises(ValueError, match="mixed lengths"):
+        knn_join(mixed, c, k=3)
+
+
+def test_knn_runs_from_foreign_cwd(tmp_path, sf_dir):
+    """A vanilla session started outside the repo runs a query whose
+    Python workers import the package (``apply_runtime_confs`` puts the
+    package on the workers' path)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys; sys.path.insert(0, %r)\n"
+        "from pyspark.sql import SparkSession\n"
+        "from ai_incident_analyst_spark.queries import REGISTRY\n"
+        "spark = SparkSession.builder.master('local[2]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "n = len(REGISTRY['knn_l2'].fn(spark, %r).collect())\n"
+        "print('ROWS', n)\n"
+        "spark.stop()\n" % (repo, sf_dir))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=300)
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert "ROWS 25" in res.stdout
 
 
 def test_ivf_recall(spark, sf_dir, vec_data):

@@ -61,10 +61,16 @@ def test_dedup_keep_first_single_shuffle(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_knn_is_broadcast_nested_loop_not_shuffled_cartesian(spark, sf_dir):
+def test_knn_is_one_arrow_pass_not_cartesian(spark, sf_dir):
     plan = _plan(spark, sf_dir, "knn_l2")
-    assert "BroadcastNestedLoopJoin" in plan
+    # queries ride a broadcast variable; the corpus is scored in ONE
+    # Arrow pass with per-partition top-k, never joined row-by-row
+    assert plan.count("MapInPandas") == 1
+    assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan  # shuffled cartesian = corpus shuffle
+    # the final top-k window shuffles candidates by query id only
+    assert [ln.split("(")[1].split("#")[0] for ln in plan.splitlines()
+            if "ENSURE_REQUIREMENTS" in ln] == ["query_id"]
 
 
 def test_fuzzy_dedup_plans_never_cartesian(spark, sf_dir):
