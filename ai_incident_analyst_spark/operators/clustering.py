@@ -26,17 +26,13 @@ KMeans does under the RDD API, restated on DataFrames):
   sampling.py``).
 
 Cross-engine reproducibility (``round_dp``): discretizing each round's
-centroids and assignment scores to ``round_dp`` decimals absorbs
+centroids and assignment scores to ``round_dp`` decimals, half away from
+zero as SQL's ``round()`` does (``knn.round_half_away``), absorbs
 ulp-level FP-association differences between engines and partition
-layouts. One residual divergence class remains and is accepted: numpy's
-``np.round`` is round-half-to-EVEN while SQL engines' ``round()`` is
-round-half-AWAY-from-zero, so a value landing within an ulp of a
-``.5 × 10^-round_dp`` boundary could round differently across engines.
-Measured absent on the shared seed-42 testdata (the r6 perturbation
-experiment: results tolerate injected 1e-6 noise, and the
-``kmeans_centroids`` diagnostic query hash-checks the final coordinates
-directly). ``kmeans_fit_int`` below removes the class entirely: exact
-integer arithmetic in every decision, no rounding rule to disagree on.
+layouts. Assignment is ``knn.block_topk``'s ``l2_cell`` argmin, the
+score and tie-break the SQL twins replay. A float mean can still land
+within an ulp of a rounding boundary; ``kmeans_fit_int`` below has no
+such boundary: exact integer arithmetic in every decision.
 
 Per-round cost at 100 TB: one corpus scan + a k×P-row collect — no
 shuffle at all. Rounds are the serial factor; cap with ``max_iter`` and
@@ -52,24 +48,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import l2_sq
+from .knn import (_hash_sample, _valid_rows, assign_cells, block_topk,
+                  round_half_away)
 from .util import local_frame, spread
 
 
 def _init_centroids(df: DataFrame, id_col: str, vec_col: str,
                     k: int) -> np.ndarray:
-    """Deterministic hash-ordered init: k rows with smallest md5(id)."""
-    rows = (
-        df.select(F.col(id_col).cast("string").alias("i"),
-                  F.col(vec_col).cast("array<double>").alias("v"))
-        .withColumn("__h", F.md5(F.col("i")))
-        .orderBy("__h", "i")
-        .limit(k)
-        .select("v")
-        .collect()
-    )
-    if len(rows) < k:
-        raise ValueError(f"k={k} exceeds number of rows ({len(rows)})")
-    return np.array([r["v"] for r in rows], dtype=np.float64)
+    """Deterministic hash-ordered init: the k non-NULL vectors with the
+    smallest md5(id)."""
+    cents = _hash_sample(df, id_col, vec_col, k)
+    if len(cents) < k:
+        raise ValueError(f"k={k} exceeds number of rows ({len(cents)})")
+    return cents
 
 
 def _partials_pass(df: DataFrame, vec_col: str, centroids: np.ndarray,
@@ -77,30 +69,25 @@ def _partials_pass(df: DataFrame, vec_col: str, centroids: np.ndarray,
     """One assignment pass: returns folded (k, d+1) [count | sum] matrix.
 
     With ``round_dp`` set, the assignment scores are rounded before the
-    argmin (ties broken by lowest centroid id — numpy argmin's first-index
-    rule): two centroids near-equidistant from a point would otherwise
-    resolve by BLAS-vs-sequential-fold ulps, which differ across engines
-    and builds even when the centroids themselves are identical.
+    argmin (ties broken by lowest centroid id): two centroids
+    near-equidistant from a point would otherwise resolve by
+    BLAS-vs-sequential-fold ulps, which differ across engines and builds
+    even when the centroids themselves are identical. A row whose vector
+    is NULL or not d long is skipped.
     """
     k, d = centroids.shape
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast(centroids)
-    cn2 = (centroids * centroids).sum(axis=1)
-    bn2 = sc.broadcast(cn2)
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents, cnorm2 = bc.value, bn2.value
+        cents = bc.value
         counts = np.zeros(k, dtype=np.int64)
-        sums = np.zeros((k, cents.shape[1]), dtype=np.float64)
+        sums = np.zeros((k, d), dtype=np.float64)
         for pdf in batches:
+            pdf, mat = _valid_rows(pdf, vec_col, d)
             if len(pdf) == 0:
                 continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            # argmin ||x-c||^2 = argmin ||c||^2 - 2 x.c  (||x||^2 constant)
-            scores = cnorm2[None, :] - 2.0 * (mat @ cents.T)
-            if round_dp is not None:
-                scores = np.round(scores, round_dp)
-            assign = scores.argmin(axis=1)
+            assign = block_topk(mat, cents, 1, "l2_cell", round_dp)[0][:, 0]
             counts += np.bincount(assign, minlength=k)
             np.add.at(sums, assign, mat)
         nz = np.nonzero(counts)[0]
@@ -163,7 +150,7 @@ def kmeans_fit(df: DataFrame, id_col: str, vec_col: str, k: int,
             new = np.where(counts[:, None] > 0,
                            sums / np.maximum(counts[:, None], 1), cents)
             if round_dp is not None:
-                new = np.round(new, round_dp)
+                new = round_half_away(new, round_dp)
             shift = float(np.max(np.linalg.norm(new - cents, axis=1)))
             cents = new
             if shift <= tol:
@@ -186,40 +173,23 @@ def kmeans_assign(df: DataFrame, vec_col: str, centroids: np.ndarray,
                   out_col: str = "cluster",
                   dist_col: Optional[str] = None,
                   round_dp: Optional[int] = None) -> DataFrame:
-    """Annotate each row with its nearest centroid (and optionally the
-    squared-L2 distance). One Arrow pass, no shuffle; all original
-    columns pass through. ``round_dp`` rounds the assignment scores
-    before the argmin (lowest-centroid-id tie-break) — same
-    engine-portability rationale as ``kmeans_fit``."""
+    """Annotate each row with its nearest centroid's index (and
+    optionally the squared-L2 distance ‖x−c‖² to it): ``assign_cells``
+    under ids 0..k−1, so one Arrow pass, no shuffle, all original
+    columns pass through, and a row whose vector is NULL or not d long
+    is dropped. ``round_dp`` rounds the assignment scores before the
+    argmin (lowest-centroid-id tie-break) — same engine-portability
+    rationale as ``kmeans_fit``."""
     cents = np.asarray(centroids, dtype=np.float64)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(cents)
-    cols = df.columns
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    schema = f"{fields}, {out_col} int" + \
-        (f", {dist_col} double" if dist_col else "")
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc.value
-        cn2 = (c * c).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array([np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]])
-            scores = cn2[None, :] - 2.0 * (mat @ c.T)
-            if round_dp is not None:
-                scores = np.round(scores, round_dp)
-            assign = scores.argmin(axis=1)
-            out = pdf[cols].copy()
-            out[out_col] = assign.astype("int32")
-            if dist_col:
-                xn2 = (mat * mat).sum(axis=1)
-                out[dist_col] = xn2 + scores[np.arange(len(mat)), assign]
-            yield out
-
-    return df.mapInPandas(part, schema=schema)
+    out = assign_cells(df, vec_col, np.arange(len(cents), dtype=np.int32),
+                       cents, cell_col=out_col, cell_type="int",
+                       round_dp=round_dp)
+    if not dist_col:
+        return out
+    cdf = centroids_df(df.sparkSession, cents, "__cid", "__c")
+    return (out.join(F.broadcast(cdf), F.col(out_col) == F.col("__cid"))
+            .withColumn(dist_col, l2_sq(vec_col, "__c"))
+            .drop("__cid", "__c"))
 
 
 def kmeans_inertia(df: DataFrame, vec_col: str,
@@ -228,9 +198,7 @@ def kmeans_inertia(df: DataFrame, vec_col: str,
     objective) — one pass, driver gets a single float."""
     assigned = kmeans_assign(df.select(vec_col), vec_col, centroids,
                              dist_col="__d2")
-    row = assigned.agg(F.sum(F.greatest(F.col("__d2"), F.lit(0.0)))
-                       .alias("s")).collect()[0]
-    return float(row["s"] or 0.0)
+    return float(assigned.agg(F.sum("__d2")).collect()[0][0] or 0.0)
 
 def _quantize(mat: np.ndarray, scale: int) -> np.ndarray:
     """float matrix -> integer domain via floor(x*scale + 0.5): one
@@ -287,23 +255,22 @@ def kmeans_fit_int(df: DataFrame, id_col: str, vec_col: str, k: int,
 def _int_partials_pass(df: DataFrame, vec_col: str, cents_q: np.ndarray,
                        scale: int) -> np.ndarray:
     """One exact-integer assignment pass: folded (k, d+1) [count | Σx]
-    int64 matrix. Fold order is irrelevant — integer addition commutes."""
+    int64 matrix. Fold order is irrelevant — integer addition commutes.
+    A row whose vector is NULL or not d long is skipped."""
     k, d = cents_q.shape
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast(cents_q)
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = bc.value
-        cn2 = (c * c).sum(axis=1)
         counts = np.zeros(k, dtype=np.int64)
-        sums = np.zeros((k, c.shape[1]), dtype=np.int64)
+        sums = np.zeros((k, d), dtype=np.int64)
         for pdf in batches:
+            pdf, mat = _valid_rows(pdf, vec_col, d)
             if len(pdf) == 0:
                 continue
-            xq = _quantize(np.array(list(pdf[vec_col]), dtype=np.float64),
-                           scale)
-            scores = cn2[None, :] - 2 * (xq @ c.T)   # exact int64
-            assign = scores.argmin(axis=1)
+            xq = _quantize(mat, scale)
+            assign = block_topk(xq, c, 1, "l2_cell")[0][:, 0]  # exact int64
             counts += np.bincount(assign, minlength=k)
             np.add.at(sums, assign, xq)
         nz = np.nonzero(counts)[0]
@@ -333,7 +300,8 @@ def kmeans_assign_int(df: DataFrame, vec_col: str, cents_q: np.ndarray,
     """Exact-integer nearest-centroid annotation (the ``kmeans_assign``
     sibling for quantized centroids): ties break by lowest centroid id
     via argmin's first-index rule — but with exact arithmetic a tie is
-    a true tie, not an ulp accident."""
+    a true tie, not an ulp accident. A row whose vector is NULL or not
+    d long is dropped."""
     c_ = np.asarray(cents_q, dtype=np.int64)
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast(c_)
@@ -343,15 +311,13 @@ def kmeans_assign_int(df: DataFrame, vec_col: str, cents_q: np.ndarray,
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = bc.value
-        cn2 = (c * c).sum(axis=1)
         for pdf in batches:
+            pdf, mat = _valid_rows(pdf, vec_col, c.shape[1])
             if len(pdf) == 0:
                 continue
-            xq = _quantize(np.array([np.asarray(v, dtype=np.float64)
-                                     for v in pdf[vec_col]]), scale)
-            scores = cn2[None, :] - 2 * (xq @ c.T)
+            sel = block_topk(_quantize(mat, scale), c, 1, "l2_cell")[0]
             out = pdf[cols].copy()
-            out[out_col] = scores.argmin(axis=1).astype("int32")
+            out[out_col] = sel[:, 0].astype("int32")
             yield out
 
     return df.mapInPandas(part, schema=f"{fields}, {out_col} int")

@@ -37,7 +37,8 @@ def round_half_away(x, dp: int):
     """Round to ``dp`` decimals, halves away from zero, ``-0.0`` → ``+0.0``
     — as Spark's ``F.round`` and DuckDB's ``round`` do, NOT ``np.round``'s
     half-to-even: a score exactly on a half at ``dp`` must rank the same
-    engine-vs-twin (r13, ADVICE)."""
+    engine-vs-twin. Every rounded score or coordinate in the package goes
+    through here."""
     import numpy as np
 
     scale = 10.0 ** dp
@@ -51,35 +52,113 @@ def block_topk(qmat, cmat, k: int, metric: str = "l2_sq",
     ``qmat`` is (nq, d) and ``cmat`` (nc, d), both float64. Scores come
     from one BLAS matmul: ‖q−c‖² = ‖q‖²+‖c‖²−2q·cᵀ for ``l2_sq``
     (clamped at +0.0, so identical vectors never score negative), q·c
-    over the norms for ``cosine``. ``round_dp`` rounds the scores with
+    over the norms for ``cosine``. The internal metric ``l2_cell`` is
+    the nearest-centroid score ‖c‖²−2q·cᵀ: ‖q‖² is constant per row, so
+    it ranks like ``l2_sq``, unclamped — the form every quantizer
+    assigns by (IVF cells, k-means, PQ codes) and every SQL twin's cell
+    ``ORDER BY`` replays; on int64 inputs it stays exact integer
+    arithmetic. ``round_dp`` rounds the scores with
     ``round_half_away`` BEFORE the selection (the repo-wide
     round-then-rank contract). Returns ``(idx, score)``, both
     (nq, min(k, nc)): column indices into ``cmat``, best first, and
     their scores. Ties keep ``cmat``'s row order (stable argsort), so a
-    block sorted by id breaks ties by id ascending. A zero-norm vector
-    scores NaN under cosine and ranks last.
+    block sorted by id breaks ties by id ascending; NaN ranks last (a
+    zero-norm vector under cosine). For k = 1 the same rule selects by
+    an argmin instead of a full argsort.
     """
     import numpy as np
 
-    if metric not in _METRICS:
+    if metric not in _METRICS + ("l2_cell",):
         raise ValueError(f"metric must be one of {_METRICS}")
-    qnorm2 = (qmat * qmat).sum(axis=1)
     cnorm2 = (cmat * cmat).sum(axis=1)
     dot = qmat @ cmat.T  # (nq, nc) — BLAS
-    if metric == "l2_sq":
+    if metric == "l2_cell":
+        score = cnorm2[None, :] - 2 * dot
+    elif metric == "l2_sq":
+        qnorm2 = (qmat * qmat).sum(axis=1)
         # + 0.0: np.maximum keeps a -0.0 score; NaN passes through
         score = np.maximum(qnorm2[:, None] + cnorm2[None, :] - 2.0 * dot,
                            0.0) + 0.0
     else:
+        qnorm2 = (qmat * qmat).sum(axis=1)
         with np.errstate(divide="ignore", invalid="ignore"):
             score = dot / (np.sqrt(qnorm2)[:, None]
                            * np.sqrt(cnorm2)[None, :])
     if round_dp is not None:
         score = round_half_away(score, round_dp)
-    key = score if metric == "l2_sq" else -score
-    kk = min(k, score.shape[1])
-    idx = np.argsort(key, axis=1, kind="stable")[:, :kk]
+    key = -score if metric == "cosine" else score
+    if k == 1 and key.shape[1]:
+        nan = np.isnan(key)
+        if nan.any():
+            idx = np.where(nan, np.inf, key).argmin(axis=1)
+            # a row whose best real score is +inf keeps its first +inf,
+            # not an earlier NaN (all-NaN rows keep 0, as argsort does)
+            rows = nan[np.arange(len(idx)), idx] & ~nan.all(axis=1)
+            idx[rows] = (key[rows] == np.inf).argmax(axis=1)
+        else:
+            idx = key.argmin(axis=1)
+        idx = idx[:, None]
+    else:
+        idx = np.argsort(key, axis=1, kind="stable")[:, :k]
     return idx, np.take_along_axis(score, idx, axis=1)
+
+
+def _stack(rows, what: str):
+    """The rows whose vector ``v`` is not NULL, and those vectors as one
+    float64 (n, d) matrix — the driver side of every collected query
+    set or training sample. Mixed lengths raise ``ValueError``."""
+    import numpy as np
+
+    rows = [r for r in rows if r["v"] is not None]
+    dims = {len(r["v"]) for r in rows}
+    if len(dims) > 1:
+        raise ValueError(f"{what}: vectors have mixed lengths {sorted(dims)}")
+    return rows, np.array([r["v"] for r in rows], dtype=np.float64)
+
+
+def _collect_queries(queries: DataFrame, query_id: str, query_vec: str,
+                     what: str):
+    """The query side on the driver: ``(ids, (nq, d) matrix)``. A NULL
+    query vector is dropped; ids keep their native type (long or
+    string), so the output schema follows the input."""
+    import numpy as np
+
+    rows, qmat = _stack(queries.select(
+        F.col(query_id).alias("qid"),
+        F.col(query_vec).cast("array<double>").alias("v")).collect(), what)
+    return np.array([r["qid"] for r in rows]), qmat
+
+
+def _hash_sample(df: DataFrame, id_col: str, vec_col: str, n: int):
+    """The ``n`` rows with the smallest ``md5(id)`` (ties by id) as a
+    float64 matrix: the engine-portable sample behind k-means init and
+    PQ training — reproducible across runs, cluster layouts and appends
+    of later rows. NULL vectors sort after every other row and are
+    skipped."""
+    rows = (
+        df.select(F.col(id_col).cast("string").alias("i"),
+                  F.col(vec_col).cast("array<double>").alias("v"))
+        .withColumn("__h", F.md5(F.col("i")))
+        .orderBy(F.col("v").isNull(), "__h", "i")
+        .limit(n)
+        .select("v")
+        .collect()
+    )
+    return _stack(rows, f"sample of {vec_col!r}")[1]
+
+
+def _valid_rows(pdf: pd.DataFrame, vec_col: str, d: int):
+    """An Arrow batch without its NULL or not-``d``-long vectors, and
+    the kept vectors as a float64 (n, d) matrix. Dirty rows are dropped
+    here, not by a Spark filter: a filter on a vector that a Python UDF
+    computes makes Catalyst evaluate that UDF twice."""
+    import numpy as np
+
+    ok = np.fromiter((v is not None and len(v) == d for v in pdf[vec_col]),
+                     bool, len(pdf))
+    if not ok.all():
+        pdf = pdf[ok].reset_index(drop=True)
+    return pdf, np.array(list(pdf[vec_col]), dtype=np.float64)
 
 
 def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -111,34 +190,18 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     qtype = queries.schema[query_id].dataType.simpleString()
     ctype_id = corpus.schema[corpus_id].dataType.simpleString()
     out_schema = f"query_id {qtype}, vec_id {ctype_id}, distance double"
-    # dirty rows are dropped here and in ``part``, not by a Spark filter:
-    # a filter on a vector that a Python UDF computes makes Catalyst
-    # evaluate that UDF twice
-    qrows = [r for r in queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("qv")).collect()
-        if r["qv"] is not None]
-    dims = {len(r["qv"]) for r in qrows}
-    if len(dims) > 1:
-        raise ValueError(
-            f"knn_join: query vectors have mixed lengths {sorted(dims)}")
-    if not qrows:
+    qids, qmat = _collect_queries(queries, query_id, query_vec, "knn_join")
+    if not len(qids):
         return local_frame(corpus.sparkSession, [], out_schema)
-    # no forced dtype: ids keep their native type (long or string)
-    qids = np.array([r["qid"] for r in qrows])
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)  # (nq, d)
     bq = corpus.sparkSession.sparkContext.broadcast((qids, qmat))
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, qmat_ = bq.value
         for pdf in batches:
-            pdf = pdf[np.fromiter(
-                (v is not None and len(v) == qmat_.shape[1]
-                 for v in pdf[corpus_vec]), bool, len(pdf))]
+            pdf, cmat = _valid_rows(pdf, corpus_vec, qmat_.shape[1])
             if len(pdf) == 0:
                 continue
             cid = pdf[corpus_id].to_numpy()
-            cmat = np.array(list(pdf[corpus_vec]), dtype=np.float64)
             idx, top = block_topk(qmat_, cmat, k, metric, round_dp)
             keep = ~np.isnan(top).ravel()  # NaN ranks last: lossless
             yield pd.DataFrame({
@@ -210,14 +273,14 @@ def assign_cells(df: DataFrame, vec_col: str, centroid_ids, centroid_mat,
 
     Rows whose vector is null or has the wrong dimensionality are DROPPED
     (they have no meaningful cell; at 100 TB one malformed row must not
-    kill the job). ``clustering.kmeans_assign`` is the index-returning
-    sibling of this pass — a behavior fix here likely applies there too.
+    kill the job).
 
-    ``round_dp`` rounds the assignment scores before the (stable) argsort
-    — the same engine-portability knob as ``kmeans_fit``: a vector
-    near-equidistant from two centroids would otherwise pick its cell by
-    BLAS-vs-sequential-fold ulps that differ across engines/builds, which
-    matters whenever the cell choice must replay in a DuckDB twin.
+    The cells are ``block_topk``'s ``l2_cell`` top-n: ``round_dp`` rounds
+    the scores half away from zero before the selection, and ids sorted
+    ascending break ties by centroid id — the (round(score), centroid_id)
+    order every SQL twin's cell ``ORDER BY`` replays. The rounding keeps
+    a vector near-equidistant from two centroids from picking its cell
+    by BLAS-vs-sequential-fold ulps that differ across engines.
     """
     import numpy as np
 
@@ -231,32 +294,13 @@ def assign_cells(df: DataFrame, vec_col: str, centroid_ids, centroid_mat,
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_, c = b.value
-        d = c.shape[1]
-        cn2 = (c * c).sum(axis=1)
         for pdf in batches:
+            pdf, x = _valid_rows(pdf, vec_col, c.shape[1])
             if len(pdf) == 0:
                 continue
-            valid = np.fromiter(
-                (v is not None and len(v) == d for v in pdf[vec_col]),
-                dtype=bool, count=len(pdf))
-            if not valid.all():
-                pdf = pdf[valid].reset_index(drop=True)
-                if len(pdf) == 0:
-                    continue
-            x = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            # argmin ‖x−c‖² = argmin ‖c‖² − 2x·c (‖x‖² constant per row);
-            # ids_ sorted ascending + stable argsort reproduce knn_join's
-            # (distance asc, centroid_id asc) tie-break
-            scores = cn2[None, :] - 2.0 * (x @ c.T)
-            if round_dp is not None:
-                scores = np.round(scores, round_dp)
-            kk = min(n, len(ids_))
-            if kk == 1:
-                sel = scores.argmin(axis=1)[:, None]
-            else:
-                sel = np.argsort(scores, axis=1, kind="stable")[:, :kk]
-            out = pdf[cols].iloc[np.repeat(np.arange(len(pdf)), kk)]
+            sel, _ = block_topk(x, c, n, "l2_cell", round_dp)
+            out = pdf[cols].iloc[np.repeat(np.arange(len(pdf)),
+                                           sel.shape[1])]
             out = out.reset_index(drop=True)
             out[cell_col] = ids_[sel.ravel()]
             yield out
@@ -431,8 +475,9 @@ def lsh_cosine_knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
                         # stable argsort over 6dp-rounded |margins|:
                         # ties resolve to the lower plane index in any
                         # engine — the multi-probe flip order contract
-                        order = np.argsort(np.round(np.abs(dots), 6),
-                                           axis=1, kind="stable")
+                        order = np.argsort(
+                            round_half_away(np.abs(dots), 6),
+                            axis=1, kind="stable")
                         for j in range(probes):
                             flipped = buckets ^ weights[order[:, j]]
                             frames.append(pd.DataFrame({
@@ -573,19 +618,8 @@ def pq_train_codebooks(corpus: DataFrame, id_col: str, vec_col: str,
     vectors regardless of corpus size); the collect is capped at
     ``sample_n`` rows by construction.
     """
-    import numpy as np
-
-    rows = (
-        corpus.select(F.col(id_col).cast("string").alias("i"),
-                      F.col(vec_col).cast("array<double>").alias("v"))
-        .withColumn("__h", F.md5(F.col("i")))
-        .orderBy("__h", "i")
-        .limit(sample_n)
-        .select("v")
-        .collect()
-    )
-    x = np.array([r["v"] for r in rows], dtype=np.float64)
-    return _pq_lloyd(x, m, kc, iters)
+    return _pq_lloyd(_hash_sample(corpus, id_col, vec_col, sample_n),
+                     m, kc, iters)
 
 
 def pq_encode(df: DataFrame, id_col: str, vec_col: str, codebooks) -> DataFrame:
@@ -598,30 +632,22 @@ def pq_encode(df: DataFrame, id_col: str, vec_col: str, codebooks) -> DataFrame:
     partitioning the corpus already has.
 
     The id column keeps its input type (long, string, …) — derived from
-    the schema, like ``_ivfpq_encode`` does for ``__cell``.
+    the schema, like ``_ivfpq_encode`` does for ``__cell``. A row whose
+    vector is NULL or not ``m·dsub`` long is dropped.
     """
-    import numpy as np
-
     id_type = df.schema[id_col].dataType.simpleString()
-    m, kc, dsub = codebooks.shape
     sc = df.sparkSession.sparkContext
     bb = sc.broadcast(codebooks)
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         books = bb.value
-        # ‖c‖² per codeword, precomputed once per task
-        cn2 = (books * books).sum(axis=2)  # (m, kc)
         for pdf in batches:
+            pdf, mat = _valid_rows(pdf, vec_col,
+                                   books.shape[0] * books.shape[2])
             if len(pdf) == 0:
                 continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for j in range(m):
-                sub = mat[:, j * dsub:(j + 1) * dsub]
-                d2 = cn2[j][None, :] - 2.0 * (sub @ books[j].T)
-                codes[:, j] = np.argmin(d2, axis=1)
             yield pd.DataFrame({"id": pdf[id_col],
-                                "code": list(codes)})
+                                "code": list(_pq_codes(mat, books))})
 
     return (
         df.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
@@ -649,18 +675,20 @@ def pq_knn_join(queries: DataFrame, corpus: DataFrame, codebooks,
     standard RAM-resident billion-vector design.
 
     Ties: encode ties → lowest code; top-k ties → lowest ``vec_id``
-    (the repo-wide kNN rule).
+    (the repo-wide kNN rule). Dirty rows follow ``knn_join``: NULL
+    vectors are dropped, mixed query lengths raise ``ValueError`` and no
+    queries give an empty frame.
     """
     import numpy as np
 
     m, kc, dsub = codebooks.shape
-    qrows = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("qv")).collect()
-    # no forced dtype: long ids stay int64, string ids stay strings —
-    # both repeat/fancy-index fine, and the output schema follows suit
-    qids = np.array([r["qid"] for r in qrows])
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)
+    qtype = queries.schema[query_id].dataType.simpleString()
+    ctype_id = corpus.schema[corpus_id].dataType.simpleString()
+    out_schema = f"query_id {qtype}, vec_id {ctype_id}, distance double"
+    qids, qmat = _collect_queries(queries, query_id, query_vec,
+                                  "pq_knn_join")
+    if not len(qids):
+        return local_frame(corpus.sparkSession, [], out_schema)
     # LUT[nq, m, kc]: exact squared-L2 between query subvector and codeword
     lut = np.empty((len(qids), m, kc))
     for j in range(m):
@@ -671,10 +699,6 @@ def pq_knn_join(queries: DataFrame, corpus: DataFrame, codebooks,
     blut = sc.broadcast((qids, lut))
 
     encoded = pq_encode(corpus, corpus_id, corpus_vec, codebooks)
-
-    qtype = queries.schema[query_id].dataType.simpleString()
-    ctype_id = corpus.schema[corpus_id].dataType.simpleString()
-    out_schema = f"query_id {qtype}, vec_id {ctype_id}, distance double"
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, lut_ = blut.value
@@ -717,36 +741,46 @@ def _pq_lloyd(x, m: int, kc: int, iters: int,
     ``ivfpq_knn_join`` (cell residuals).
 
     ``round_dp`` discretizes each round's assignment distances (before
-    the argmin) and updated codewords — the ``kmeans_fit`` knob: it
-    makes the trained codebooks reproducible cross-engine so the WHOLE
-    trained IVF-PQ composition can replay as a DuckDB twin
-    (``_ivfpq_trained_sql``). Default None keeps bit-for-bit legacy
-    behavior."""
+    the argmin) and updated codewords, half away from zero — the
+    ``kmeans_fit`` knob: it makes the trained codebooks reproducible
+    cross-engine so the WHOLE trained IVF-PQ composition can replay as a
+    DuckDB twin (``_ivfpq_trained_sql``)."""
     import numpy as np
 
+    if len(x) < kc:
+        raise ValueError(f"kc={kc} exceeds sample size {len(x)}")
     d = x.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
-    if len(x) < kc:
-        raise ValueError(f"kc={kc} exceeds sample size {len(x)}")
     books = np.empty((m, kc, dsub))
     for j in range(m):
         sub = x[:, j * dsub:(j + 1) * dsub]
         c = sub[:kc].copy()
         for _ in range(iters):
-            d2 = ((sub[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            if round_dp is not None:
-                d2 = np.round(d2, round_dp)
-            a = np.argmin(d2, axis=1)
+            a = block_topk(sub, c, 1, "l2_sq", round_dp)[0][:, 0]
             for ci in range(kc):
                 pts = sub[a == ci]
                 if len(pts):
                     c[ci] = pts.mean(axis=0)
             if round_dp is not None:
-                c = np.round(c, round_dp)
+                c = round_half_away(c, round_dp)
         books[j] = c
     return books
+
+
+def _pq_codes(x, books, round_dp: int | None = None):
+    """Nearest codeword per subspace, ties → lowest code: the (n, m)
+    int32 PQ codes of ``x`` under ``(m, kc, dsub)`` codebooks — the one
+    encoder behind ``pq_encode`` and ``_ivfpq_encode``."""
+    import numpy as np
+
+    m, _, dsub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for j in range(m):
+        codes[:, j] = block_topk(x[:, j * dsub:(j + 1) * dsub], books[j],
+                                 1, "l2_cell", round_dp)[0][:, 0]
+    return codes
 
 
 def _py(v):
@@ -763,23 +797,8 @@ def _ivfpq_train(corpus: DataFrame, cmat, m: int, kc: int,
                  corpus_id: str, corpus_vec: str,
                  round_dp: int | None = None):
     """Codebooks over cell RESIDUALS of a bounded hash-ordered sample."""
-    import numpy as np
-
-    rows = (
-        corpus.select(F.col(corpus_id).cast("string").alias("i"),
-                      F.col(corpus_vec).cast("array<double>").alias("v"))
-        .withColumn("__h", F.md5(F.col("i")))
-        .orderBy("__h", "i")
-        .limit(sample_n)
-        .select("v")
-        .collect()
-    )
-    xs = np.array([r["v"] for r in rows], dtype=np.float64)
-    cn2 = (cmat * cmat).sum(axis=1)
-    scores = cn2[None, :] - 2.0 * (xs @ cmat.T)
-    if round_dp is not None:
-        scores = np.round(scores, round_dp)
-    assign = np.argmin(scores, axis=1)
+    xs = _hash_sample(corpus, corpus_id, corpus_vec, sample_n)
+    assign = block_topk(xs, cmat, 1, "l2_cell", round_dp)[0][:, 0]
     return _pq_lloyd(xs - cmat[assign], m, kc, iters, round_dp=round_dp)
 
 
@@ -789,38 +808,23 @@ def _ivfpq_encode(corpus: DataFrame, ids, cmat, books, ctype: str,
     """Assign + residual-PQ-encode in ONE Arrow pass:
     ``(vec_id, __cell, code)`` — vec_id keeps its input type, like
     ``__cell`` keeps the centroid-id type via ``ctype``. ``round_dp``
-    rounds both argmins' scores (cell assign, code assign) for
-    cross-engine replay."""
-    import numpy as np
-
+    rounds both assignments' scores (cell, code) for cross-engine
+    replay. A row whose vector is NULL or not the centroids' length is
+    dropped."""
     id_type = corpus.schema[corpus_id].dataType.simpleString()
-    m, kc, dsub = books.shape
     sc = corpus.sparkSession.sparkContext
     bb = sc.broadcast((ids, cmat, books))
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_, c, bk = bb.value
-        cn2_ = (c * c).sum(axis=1)
-        bn2 = (bk * bk).sum(axis=2)  # (m, kc)
-
-        def rnd(s):
-            return np.round(s, round_dp) if round_dp is not None else s
-
         for pdf in batches:
+            pdf, x = _valid_rows(pdf, "__cv", c.shape[1])
             if len(pdf) == 0:
                 continue
-            x = np.array(list(pdf["__cv"]), dtype=np.float64)
-            cell_rows = np.argmin(rnd(cn2_[None, :] - 2.0 * (x @ c.T)),
-                                  axis=1)
-            res = x - c[cell_rows]
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for j in range(m):
-                sub = res[:, j * dsub:(j + 1) * dsub]
-                codes[:, j] = np.argmin(
-                    rnd(bn2[j][None, :] - 2.0 * (sub @ bk[j].T)), axis=1)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"],
-                                "__cell": ids_[cell_rows],
-                                "code": list(codes)})
+            cell_rows = block_topk(x, c, 1, "l2_cell", round_dp)[0][:, 0]
+            yield pd.DataFrame({
+                "vec_id": pdf["vec_id"], "__cell": ids_[cell_rows],
+                "code": list(_pq_codes(x - c[cell_rows], bk, round_dp))})
 
     return (
         spread(corpus.select(F.col(corpus_id).alias("vec_id"),
@@ -837,27 +841,25 @@ def _ivfpq_luts(queries: DataFrame, ids, cmat, books, nprobe: int,
                 round_dp: int | None = None):
     """Per-(query, probed cell) ADC lookup tables —
     |Q|·nprobe·m·kc doubles, driver-built from the collected queries.
-    ``round_dp`` rounds the probe scores before the (stable) argsort."""
+    The probed cells are ``block_topk``'s ``l2_cell`` top-nprobe, scores
+    rounded at ``round_dp``."""
     import numpy as np
 
     m, kc, dsub = books.shape
-    cn2 = (cmat * cmat).sum(axis=1)
-    qrows = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("qv")).collect()
+    qids, qmat = _collect_queries(queries, query_id, query_vec,
+                                  "ivfpq_knn_join")
+    if not len(qids):
+        return {}
+    probes, _ = block_topk(qmat, cmat, nprobe, "l2_cell", round_dp)
     luts = {}
-    for r in qrows:
-        qv = np.asarray(r["qv"], dtype=np.float64)
-        scores = cn2 - 2.0 * (cmat @ qv)
-        if round_dp is not None:
-            scores = np.round(scores, round_dp)
-        for pr in np.argsort(scores, kind="stable")[:nprobe]:
+    for qid, qv, prs in zip(qids, qmat, probes):
+        for pr in prs:
             qres = qv - cmat[pr]
             lut = np.empty((m, kc))
             for j in range(m):
                 diff = qres[j * dsub:(j + 1) * dsub][None, :] - books[j]
                 lut[j] = (diff * diff).sum(axis=1)
-            luts[(_py(r["qid"]), _py(ids[pr]))] = lut
+            luts[(_py(qid), _py(ids[pr]))] = lut
     return luts
 
 
@@ -902,7 +904,7 @@ def _ivfpq_scan(encoded: DataFrame, luts, m: int, k: int,
                     for j in range(m):
                         dist += lut[j][ccodes[:, j]]
                     if round_dp is not None:
-                        dist = np.round(dist, round_dp)
+                        dist = round_half_away(dist, round_dp)
                     kk = min(k, len(cids))
                     idx = np.argsort(dist, kind="stable")[:kk]
                     out_q.append(np.full(kk, qid_))
@@ -1052,7 +1054,8 @@ def ivfpq_probe_index(spark, path: str, queries: DataFrame, k: int = 5,
                .filter(F.col("__cell").isin(cells))
                .sortWithinPartitions("vec_id"))
     return _ivfpq_scan(encoded, luts, m, k,
-                       qtype=queries.schema[query_id].dataType.simpleString())
+                       qtype=queries.schema[query_id].dataType.simpleString(),
+                       round_dp=round_dp)
 
 
 def mutual_knn_pairs(df: DataFrame, id_col: str, vec_col: str,
@@ -1147,8 +1150,7 @@ def mutual_knn_pairs_ivf(df: DataFrame, id_col: str, vec_col: str,
         "__qv", ids, mat, n=nprobe, cell_type=ctype, round_dp=round_dp)
     # Each cell is one ``block_topk`` call, scores rounded at round_dp
     # BEFORE selection (the discretization-absorbs-ulps contract of
-    # assign_cells; clustering.py's module docstring states the accepted
-    # residual class); members arrive sorted by vec_id so the stable
+    # assign_cells); members arrive sorted by vec_id so the stable
     # argsort tie-breaks by id exactly like the SQL twin's ORDER BY.
     qt = df.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {qt}, vec_id {qt}, distance double"

@@ -16,9 +16,9 @@ md5 thresholds). No RNG state, no seed file to ship.
 Physical shape: the (d_in × d_out) sign matrix is driver-built and
 broadcast (768×64 ≈ 50 KB); projection is ONE Arrow ``mapInPandas`` pass
 with a single BLAS matmul per batch — no shuffle, no per-row Python.
-Output values are rounded to ``round_dp`` decimals (registry convention:
-matmul-vs-SQL-sum association noise is ~1e-15 on unit-norm 64-dim
-inputs, nine orders below the quantum).
+Output values are rounded half away from zero to ``round_dp`` decimals
+(registry convention: matmul-vs-SQL-sum association noise is ~1e-15 on
+unit-norm 64-dim inputs, nine orders below the quantum).
 
 The reference's vector side never compresses (flat FAISS index,
 ``src/vector_db/faiss_db.py``); this is part of the beyond-reference
@@ -34,6 +34,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .knn import round_half_away
 
 _EVEN_HEX = set("02468ace")
 
@@ -69,7 +71,7 @@ def rp_project(df: DataFrame, vec_col: str, d_in: int, d_out: int,
             if len(pdf) == 0:
                 continue
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            proj = np.round((mat @ s) * inv, round_dp)
+            proj = round_half_away((mat @ s) * inv, round_dp)
             out = pdf[cols].copy()
             out[out_col] = [p.tolist() for p in proj]
             yield out

@@ -975,9 +975,8 @@ def q_knn_ivf(spark, sf_dir):
         .withColumn("distance", F.round("distance", 6))
 
 
-# round(score, 6) + centroid-id tie-break mirrors the round_dp=6 argmin in
-# _partials_pass / kmeans_assign: near-equidistant centroids would otherwise
-# resolve by BLAS-vs-sequential-fold ulps that differ across engines.
+# round(score, 6) + centroid-id tie-break replays block_topk's "l2_cell"
+# selection at round_dp=6, which _partials_pass and kmeans_assign assign by.
 _KMEANS_ASSIGN_SQL = """
   SELECT vec_id, x, cl FROM (
     SELECT v.vec_id, v.x, i.cl,
@@ -1148,12 +1147,9 @@ ORDER BY cluster, pos
          "centroid coordinates, unnested to (cluster, pos, value) and "
          "floor-quantized to 1e-6 integers so the hash compares exact "
          "BIGINTs, not float formatting — isolates the centroid-update "
-         "fold (kmeans_fit). Both engines apply the identical "
-         "floor(x*1e6+0.5) on the already-round(.,6)-discretized "
-         "coordinates; the only residual divergence class is a mean "
-         "landing within an ulp of a .5e-6 boundary where numpy "
-         "half-to-even and DuckDB half-away disagree — measured absent "
-         "on the shared seed-42 data (see clustering.py docstring)")
+         "fold (kmeans_fit). Both engines round each round's means half "
+         "away from zero to 6 dp, then apply the identical "
+         "floor(x*1e6+0.5)")
 def q_kmeans_centroids(spark, sf_dir):
     import numpy as np
     from .operators.clustering import kmeans_fit
@@ -5562,12 +5558,14 @@ def _ivfpq_trained_sql(m: int = 4, kc: int = 16, iters: int = 2,
     replay of ``_ivfpq_train``/``_pq_lloyd`` — hash-ordered sample,
     coarse residuals, per-subspace Lloyd's with first-kc init,
     ``iters`` unrolled rounds. All argmins rank on round(score, dp)
-    with the exact score FORM each Spark kernel computes (full ‖r−w‖²
-    in training, ‖w‖²−2r·w in encode — the forms differ by a per-row
-    constant, so their rounding boundaries differ; the twin must round
-    what numpy rounds). ``MATERIALIZED`` is load-bearing (the
-    ``_bpe_trained_sql`` lesson): each ``book{{t}}`` feeds the next
-    round twice, and inlining the chain would expand exponentially.
+    with the score FORM of each ``block_topk`` metric: full ‖r−w‖² in
+    training (``l2_sq``; the twin sums it per dimension, equal up to
+    ulps that the rounding absorbs), ‖w‖²−2r·w in encode (``l2_cell``)
+    — the forms differ by a per-row constant, so their rounding
+    boundaries differ. ``MATERIALIZED``
+    is load-bearing (the ``_bpe_trained_sql`` lesson): each
+    ``book{{t}}`` feeds the next round twice, and inlining the chain
+    would expand exponentially.
     """
     pre = rf"""cent AS MATERIALIZED (
   SELECT label AS cell, pos, avg(v) AS av

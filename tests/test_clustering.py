@@ -188,6 +188,73 @@ def test_kmeans_int_agrees_with_float_variant_on_separated_data(spark):
     assert af == ai
 
 
+def _with_dirty_rows(spark, df, first_vec=None):
+    """``df`` plus a NULL vector under the id that sorts first by md5
+    (the hash-ordered init meets it before any clean row) and a
+    too-short vector under the id that sorts last. ``first_vec``
+    replaces the NULL."""
+    import hashlib
+
+    def md5(i):
+        return hashlib.md5(str(i).encode()).hexdigest()
+    order = sorted(range(1000, 3000), key=md5)
+    assert md5(order[0]) < min(md5(r.id) for r in df.select("id").collect())
+    return df.unionByName(spark.createDataFrame(
+        [(order[0], first_vec), (order[-1], [1.0, 2.0])],
+        "id long, v array<double>"))
+
+
+def test_kmeans_fit_skips_dirty_vectors(spark):
+    """NULL vectors are skipped in the init sample and in every pass,
+    wrong-length ones in every pass; a wrong length inside the init
+    sample is a named error."""
+    df, _ = _toy(spark, parts=2)
+    want, _ = kmeans_fit(df, "id", "v", k=3, max_iter=3, tol=0.0,
+                         round_dp=6)
+    got, _ = kmeans_fit(_with_dirty_rows(spark, df), "id", "v", k=3,
+                        max_iter=3, tol=0.0, round_dp=6)
+    assert np.allclose(got, want, rtol=0, atol=1e-12)
+    with pytest.raises(ValueError, match="mixed lengths"):
+        kmeans_fit(_with_dirty_rows(spark, df, first_vec=[0.0]), "id", "v",
+                   k=3, max_iter=1)
+
+
+def test_kmeans_assign_drops_dirty_vectors(spark):
+    df, _ = _toy(spark, parts=2)
+    cents, _ = kmeans_fit(df, "id", "v", k=3, max_iter=2)
+    want = {r.id: (r.c, r.d2) for r in kmeans_assign(
+        df, "v", cents, out_col="c", dist_col="d2").collect()}
+    got = {r.id: (r.c, r.d2) for r in kmeans_assign(
+        _with_dirty_rows(spark, df), "v", cents, out_col="c",
+        dist_col="d2").collect()}
+    assert got == want and len(got) == 60
+
+
+def test_kmeans_fit_int_skips_dirty_vectors(spark):
+    from ai_incident_analyst_spark.operators.clustering import kmeans_fit_int
+
+    df, _ = _toy(spark, parts=2)
+    want = kmeans_fit_int(df, "id", "v", k=3, n_rounds=2)
+    got = kmeans_fit_int(_with_dirty_rows(spark, df), "id", "v", k=3,
+                         n_rounds=2)
+    assert (got == want).all()
+
+
+def test_kmeans_assign_int_drops_dirty_vectors(spark):
+    from ai_incident_analyst_spark.operators.clustering import (
+        kmeans_assign_int,
+        kmeans_fit_int,
+    )
+
+    df, _ = _toy(spark, parts=2)
+    cents = kmeans_fit_int(df, "id", "v", k=3, n_rounds=2)
+    want = {r.id: r.cluster for r in
+            kmeans_assign_int(df, "v", cents).collect()}
+    got = {r.id: r.cluster for r in kmeans_assign_int(
+        _with_dirty_rows(spark, df), "v", cents).collect()}
+    assert got == want and len(got) == 60
+
+
 # ---------------------------------------------------------------------------
 # DBSCAN (round 9)
 # ---------------------------------------------------------------------------

@@ -1,9 +1,11 @@
 """k-NN join tests: numpy exact reference (SURVEY.md §5 self-oracle),
-dirty input, the block kernel's rounding, IVF recall."""
+dirty input, the block kernel's rounding and selection, IVF recall."""
 
+import ast
 import itertools
 import math
 import os
+import pathlib
 import subprocess
 import sys
 
@@ -12,7 +14,9 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from ai_incident_analyst_spark.operators.clustering import kmeans_assign
 from ai_incident_analyst_spark.operators.knn import (
+    assign_cells,
     block_topk,
     ivf_knn_join,
     knn_join,
@@ -105,6 +109,76 @@ def test_round_half_away_and_block_topk_scores():
     idx, top = block_topk(m, m, 1, "l2_sq", round_dp=6)
     assert (idx[:, 0] == np.arange(40)).all()
     assert (top == 0.0).all() and not np.signbit(top).any()
+    # k = 1 selects by argmin, and must pick what the stable argsort
+    # (k = 2) ranks first: ties by column order, NaN last — here repeated
+    # columns and a 1-dp rounding make ties, a NaN coordinate and zero
+    # vectors (under cosine) make NaN scores, and a 1e200 coordinate
+    # makes a +inf score standing behind an earlier NaN column
+    q = np.round(rng.normal(size=(30, 3)), 1)
+    q[3] = 0.0
+    c = np.concatenate([q[:6], q[:6], rng.normal(size=(8, 3))])
+    c[2] = [np.nan, 0.0, 0.0]
+    c[7] = 0.0
+    for metric, dp in itertools.product(("l2_sq", "cosine", "l2_cell"),
+                                        (None, 1)):
+        i1, s1 = block_topk(q, c, 1, metric, dp)
+        i2, s2 = block_topk(q, c, 2, metric, dp)
+        assert (i1 == i2[:, :1]).all(), (metric, dp)
+        assert np.array_equal(s1, s2[:, :1], equal_nan=True)
+    inf = np.array([[np.nan, 0.0], [1e200, 0.0], [1e200, 0.0]])
+    with np.errstate(over="ignore"):
+        for k in (1, 2):
+            assert block_topk(np.array([[1.0, 0.0]]), inf, k,
+                              "l2_cell")[0][0, 0] == 1
+
+
+def test_cell_assignment_rounds_half_away_like_the_twin(spark):
+    """A score exactly on a half at ``round_dp``: ‖c‖²−2x·c is 3.0 for c0
+    and 2.5 for c1, so at ``round_dp=0`` half-away rounding ties them at
+    3 and the lower centroid id wins (c0), where ``np.round``'s
+    half-to-even would pick c1. The k-means twin's cell ``ORDER BY``,
+    replayed in DuckDB, is the reference."""
+    import duckdb
+
+    from ai_incident_analyst_spark.queries import _KMEANS_ASSIGN_SQL
+
+    x = np.array([[0.25, 0.0]])
+    c = np.array([[-1.5, 0.0], [-1.0, -1.0]])
+    assert np.round(2.5) == 2.0  # the rule the kernel does not use
+    assign_sql = _KMEANS_ASSIGN_SQL.replace("]), 6)", "]), 0)")
+    assert assign_sql != _KMEANS_ASSIGN_SQL
+    want = duckdb.sql(f"""
+        WITH v AS (SELECT 1 AS vec_id, [0.25, 0.0]::DOUBLE[] AS x),
+        cents AS (SELECT * FROM (VALUES (0, [-1.5, 0.0]::DOUBLE[]),
+                                        (1, [-1.0, -1.0]::DOUBLE[])) t(cl, c))
+        SELECT cl FROM ({assign_sql.format(cents="cents")})""").fetchall()
+    assert want == [(0,)]
+    assert block_topk(x, c, 1, "l2_cell", 0)[0].tolist() == [[0]]
+    df = spark.createDataFrame([(1, x[0].tolist())], "id long, v array<double>")
+    assert [r.cell for r in assign_cells(df, "v", np.array([0, 1]), c,
+                                         cell_col="cell",
+                                         round_dp=0).collect()] == [0]
+    assert [r.cluster for r in kmeans_assign(df, "v", c,
+                                             round_dp=0).collect()] == [0]
+
+
+def test_package_has_no_np_round():
+    """Every rounded score or coordinate goes through
+    ``knn.round_half_away``: ``np.round`` rounds halves to even, which
+    no SQL twin replays."""
+    package = pathlib.Path(__file__).resolve().parent.parent \
+        / "ai_incident_analyst_spark"
+    offenders = []
+    for path in sorted(package.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("round", "around", "round_")
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id in ("np", "numpy")):
+                offenders.append(f"{path.relative_to(package)}:{node.lineno}")
+    assert offenders == [], (
+        f"np.round in the package — use knn.round_half_away: {offenders}")
 
 
 def _dirty_corpus(spark):

@@ -234,16 +234,21 @@ def test_ivfpq_persisted_index_matches_inline(spark, tmp_path):
                .selectExpr("vec_id as query_id", "embedding as query_vec"))
     corp = corpus.filter("vec_id >= 4")
     cents = _label_centroids(spark, corp)
-    inline = sorted((r["query_id"], r["vec_id"], round(r["distance"], 9))
-                    for r in ivfpq_knn_join(queries, corp, cents, k=5,
-                                            m=M, kc=8,
-                                            train_sample=116).collect())
-    path = str(tmp_path / "ivfpq")
-    ivfpq_write_index(corp, cents, path, m=M, kc=8, train_sample=116)
-    probed = ivfpq_probe_index(spark, path, queries, k=5)
-    stored = sorted((r["query_id"], r["vec_id"], round(r["distance"], 9))
-                    for r in probed.collect())
-    assert inline == stored
+    for round_dp in (None, 6):
+        inline = sorted(
+            (r["query_id"], r["vec_id"], round(r["distance"], 9))
+            for r in ivfpq_knn_join(queries, corp, cents, k=5, m=M, kc=8,
+                                    train_sample=116,
+                                    round_dp=round_dp).collect())
+        path = str(tmp_path / f"ivfpq{round_dp}")
+        ivfpq_write_index(corp, cents, path, m=M, kc=8, train_sample=116,
+                          round_dp=round_dp)
+        probed = ivfpq_probe_index(spark, path, queries, k=5,
+                                   round_dp=round_dp)
+        stored = sorted(
+            (r["query_id"], r["vec_id"], round(r["distance"], 9))
+            for r in probed.collect())
+        assert inline == stored, round_dp
     # pruning proof: partition filters restrict to the probed cells
     plan = probed._jdf.queryExecution().executedPlan().toString()
     assert "__cell" in plan and "PartitionFilters" in plan
@@ -357,3 +362,61 @@ def test_ivfpq_fixed_books_skips_training_and_is_deterministic(spark):
                               cents, k=3, nprobe=2, m=M, kc=8,
                               books=books, round_dp=6).collect())
     assert a == b and len(a) == 5 * 3
+
+
+def _dirty_grid_corpus(spark, books):
+    """``_grid_corpus`` plus a NULL and a too-short vector."""
+    return _grid_corpus(spark, books).unionByName(spark.createDataFrame(
+        [(900, None), (901, [1.0, 2.0])],
+        "vec_id long, embedding array<double>")).repartition(3)
+
+
+def test_pq_encode_drops_dirty_vectors(spark):
+    books = _codewords()
+    want = {r["vec_id"]: list(r["code"]) for r in pq_encode(
+        _grid_corpus(spark, books), "vec_id", "embedding", books).collect()}
+    got = {r["vec_id"]: list(r["code"]) for r in pq_encode(
+        _dirty_grid_corpus(spark, books), "vec_id", "embedding",
+        books).collect()}
+    assert got == want
+
+
+def test_ivfpq_encode_drops_dirty_vectors(spark):
+    """The IVF-PQ corpus pass (``_ivfpq_encode``) drops NULL and
+    wrong-length vectors: same neighbours as the clean corpus."""
+    from ai_incident_analyst_spark.operators.knn import (
+        ivfpq_knn_join,
+        md5_planes,
+    )
+    books = _codewords()
+    clean = _grid_corpus(spark, books)
+    queries = (clean.filter("vec_id < 4")
+               .selectExpr("vec_id as query_id", "embedding as query_vec"))
+    cents = spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in
+         enumerate(np.random.default_rng(2).normal(size=(3, D)) * 3.0)],
+        "centroid_id long, centroid array<double>")
+
+    def run(corpus):
+        return sorted(map(tuple, ivfpq_knn_join(
+            queries, corpus, cents, k=4, nprobe=2, m=M, kc=8,
+            books=md5_planes(M, 8, DSUB), round_dp=6).collect()))
+    assert run(_dirty_grid_corpus(spark, books)) == run(clean)
+
+
+def test_pq_knn_join_dirty_queries(spark):
+    """No queries give an empty frame, a NULL query vector is dropped,
+    and mixed query lengths raise a named ValueError."""
+    books = _codewords()
+    corpus = _grid_corpus(spark, books)
+    schema = "query_id long, query_vec array<double>"
+    out = pq_knn_join(spark.createDataFrame([], schema), corpus, books)
+    assert out.collect() == []
+    assert out.columns == ["query_id", "vec_id", "distance"]
+    qv = corpus.filter("vec_id = 0").first()["embedding"]
+    rows = pq_knn_join(spark.createDataFrame([(1, qv), (2, None)], schema),
+                       corpus, books, k=3).collect()
+    assert {r["query_id"] for r in rows} == {1} and len(rows) == 3
+    with pytest.raises(ValueError, match="mixed lengths"):
+        pq_knn_join(spark.createDataFrame([(1, qv), (2, qv[:3])], schema),
+                    corpus, books)
