@@ -11,6 +11,14 @@ arrive via Arrow sized by spark.sql.execution.arrow.maxRecordsPerBatch
 (the batch_size=32 knob's analog). Everything upstream/downstream of the
 UDF stays JVM-side.
 
+The UDF's encode step is one function, ``encode_texts``, that a driver
+can call too. The incident loop does: it encodes its ≤ ``batch_size``
+picked rows on the driver after its one Spark action instead of running
+the UDF in the plan, because a Python stage above ``orderBy().limit()``
+stops Catalyst from planning the pick as ``TakeOrderedAndProject`` (it
+plans a range-partitioned full sort, a local and a global limit around
+the Python stage instead: 5 jobs for the action rather than 2).
+
 The real sentence-transformers model is not in this container, so the
 default model is a deterministic hashing embedder (feature-hashing
 bag-of-words, L2-normalized) — same shape/contract, reproducible across
@@ -55,21 +63,38 @@ def make_embed_udf(dim: int = DEFAULT_DIM,
 
     @pandas_udf("array<float>")
     def embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        model = make_model() if make_model else (lambda ts: hashing_encode(ts, dim))
+        model = make_model() if make_model else None
         for s in batches:
-            vecs = model(s.fillna("").tolist())
-            yield pd.Series([np.asarray(v, dtype=np.float32) for v in vecs])
+            yield pd.Series(encode_texts(s.tolist(), dim, model))
 
     return embed
+
+
+def encode_texts(texts: list, dim: int = DEFAULT_DIM,
+                 model: Callable[[list[str]], np.ndarray] | None = None
+                 ) -> list[np.ndarray]:
+    """The encode step of ``make_embed_udf``: NULL texts become ``""``,
+    ``model`` (default: the hashing encoder at ``dim``) encodes the
+    batch, and each vector is cast to float32. The incident loop calls
+    it on the driver, so its vectors equal ``embed_text``'s bit for bit."""
+    model = model or (lambda ts: hashing_encode(ts, dim))
+    vecs = model([t if isinstance(t, str) else "" for t in texts])
+    return [np.asarray(v, dtype=np.float32) for v in vecs]
+
+
+def embed_input(fields: list[str]) -> Column:
+    """The text ``embed_text`` encodes: the null-skipping, space-joined
+    concat of ``fields`` (embedder.py:19-21)."""
+    return F.concat_ws(" ", *[F.col(f) for f in fields])
 
 
 def embed_text(df: DataFrame, fields: list[str],
                out_col: str = "embedding", dim: int = DEFAULT_DIM,
                make_model=None) -> DataFrame:
-    """U1 end-to-end: null-skip concat of ``fields`` (embedder.py:19-21)
+    """U1 end-to-end: null-skip concat of ``fields`` (``embed_input``)
     → batched encode → attach ``embedding`` array<float> column."""
-    text = F.concat_ws(" ", *[F.col(f) for f in fields])
-    return df.withColumn(out_col, make_embed_udf(dim, make_model)(text))
+    return df.withColumn(out_col,
+                         make_embed_udf(dim, make_model)(embed_input(fields)))
 
 
 def embed_plan(snapshot: DataFrame, stored: DataFrame, id_col: str,

@@ -427,6 +427,9 @@ def lsh_cosine_knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     are rounded to 6 dp before the flip ordering (stable argsort,
     plane-index tie-break) so the probe set is engine-portable; the
     corpus side is untouched — still one row per (vector, table).
+
+    A query or corpus row whose vector is NULL or not ``d`` long is
+    dropped in the bucketing pass.
     """
     import numpy as np
 
@@ -455,13 +458,13 @@ def lsh_cosine_knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
         def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import numpy as np  # noqa: F811 — worker-side
             pl = bp.value
-            n_t, n_p, _ = pl.shape
+            n_t, n_p, d_ = pl.shape
             weights = (1 << np.arange(n_p)).astype(np.int64)
             for pdf in batches:
+                pdf, mat = _valid_rows(pdf, vec_name, d_)
                 if len(pdf) == 0:
                     continue
                 ids = pdf[id_name].to_numpy()
-                mat = np.array(list(pdf[vec_name]), dtype=np.float64)
                 frames = []
                 for t in range(n_t):
                     dots = mat @ pl[t].T  # (n, planes)

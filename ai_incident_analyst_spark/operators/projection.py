@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .knn import round_half_away
+from .knn import _valid_rows, round_half_away
 
 _EVEN_HEX = set("02468ace")
 
@@ -56,7 +56,8 @@ def rp_project(df: DataFrame, vec_col: str, d_in: int, d_out: int,
                out_col: str = "proj", round_dp: int = 6) -> DataFrame:
     """Project ``vec_col`` (array<float|double> of length ``d_in``) to
     ``d_out`` dims: ``y = (x @ S) / sqrt(d_out)`` with the ``jl_signs``
-    matrix. All original columns pass through; one Arrow pass."""
+    matrix. All original columns pass through; one Arrow pass. A row
+    whose vector is NULL or not ``d_in`` long is dropped."""
     signs = jl_signs(d_in, d_out)
     inv = 1.0 / float(np.sqrt(d_out))
     sc = df.sparkSession.sparkContext
@@ -68,9 +69,9 @@ def rp_project(df: DataFrame, vec_col: str, d_in: int, d_out: int,
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         s = bc.value
         for pdf in batches:
+            pdf, mat = _valid_rows(pdf, vec_col, d_in)
             if len(pdf) == 0:
                 continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
             proj = round_half_away((mat @ s) * inv, round_dp)
             out = pdf[cols].copy()
             out[out_col] = [p.tolist() for p in proj]

@@ -18,11 +18,17 @@ LLM call per batch) — exactly the micro-batch-as-batch escape hatch
 
 Per window, ONE Spark action narrows the batch to its ≤ ``batch_size``
 picked rows and returns everything the rest of the loop needs (prompt,
-``batch_logs``, first-row metadata, query vectors, row count): dedup →
-redact → pick → embed → one aggregate. Pick runs before embed because
-the embedding is a row-wise function of ``message`` and ``level`` and
-pick orders by ``timestamp`` alone, so only kept rows are embedded. The
-kNN, the LLM call and the entry row then run on the driver, and the
+``batch_logs``, first-row metadata, each picked row's embedding text,
+row count): dedup → redact → pick → one aggregate. The driver then
+embeds those ≤ ``batch_size`` texts with ``encode_texts``, the encode
+step the ``embed_text`` UDF runs, so the query vectors equal the UDF's
+bit for bit. The embedding is a row-wise function of ``message`` and
+``level`` and pick orders by ``timestamp`` alone, so only kept rows are
+embedded. Embedding after the action and not in the plan keeps the pick
+a ``TakeOrderedAndProject``: a Python stage above ``orderBy().limit()``
+turns it into a range-partitioned full sort with a local and a global
+limit around the Python stage (7 jobs per window instead of 4). The
+kNN, the LLM call and the entry row run on the driver too, and the
 batch source is scanned once (stream progress reports the window's true
 ``numInputRows``).
 
@@ -51,7 +57,7 @@ from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..functions.redaction import DEFAULT_PATTERNS, LLM_SIDE_PATTERNS, redact
 from ..operators.dedup import dedup_keep_first
-from ..operators.embedding import embed_text
+from ..operators.embedding import embed_input, encode_texts
 from ..operators.knn import block_topk
 from ..operators.rag import (
     FEEDBACK_TYPE,
@@ -62,8 +68,10 @@ from ..operators.rag import (
 )
 from ..operators.util import local_frame
 
-# knn_join and run_rag_batch are no longer called here; they stay bound
-# because perfbench/incident_loop.py wraps these names in its traced run
+# embed_text, knn_join and run_rag_batch are no longer called here; they
+# stay bound because perfbench/incident_loop.py wraps these names in its
+# traced run
+from ..operators.embedding import embed_text  # noqa: F401
 from ..operators.knn import knn_join  # noqa: F401
 from ..operators.rag import run_rag_batch  # noqa: F401
 
@@ -87,27 +95,7 @@ def process_incident_batch(batch: DataFrame, corpus: DataFrame,
     the streaming loop and the batch replay so incremental == batch is
     an identity by construction.
     """
-    arr = batch.withColumn("__arrival", F.monotonically_increasing_id())
-    deduped = dedup_keep_first(arr, ["message", "timestamp"],
-                               "__arrival").drop("__arrival")
-    clean = deduped.withColumn(
-        "message", redact("message", DEFAULT_PATTERNS + LLM_SIDE_PATTERNS))
-    picked = embed_text(pick_batch(clean, batch_size, "timestamp"),
-                        ["message", "level"], dim=dim)
-    # ISO timestamp for the entry: day-partitions the history sink and
-    # matches the reference's string timestamps (main.py:79-87)
-    log_cols = [c for c in clean.columns if c != "timestamp"] + ["timestamp"]
-    rows = (picked.withColumnRenamed("timestamp", "__ts_ms")
-            .withColumn("timestamp", F.date_format(
-                F.timestamp_millis(F.col("__ts_ms")),
-                "yyyy-MM-dd'T'HH:mm:ss'Z'")))
-    narrowed = rows.agg(
-        F.count("*").alias("n"),
-        prompt_col().alias("prompt"),
-        sorted_struct_array(*log_cols).alias("batch_logs"),
-        # the earliest row's metadata; the epoch-ms key orders it
-        F.min(F.struct("__ts_ms", *_META)).alias("first"),
-        F.collect_list("embedding").alias("query_vecs"))
+    narrowed = _narrow(batch, batch_size)
     got = narrowed.first()
     if got["n"] == 0:
         return None
@@ -118,7 +106,8 @@ def process_incident_batch(batch: DataFrame, corpus: DataFrame,
 
     index_cols = ["hist_id"] + [c for c in corpus.columns if c != "hist_id"]
     index = corpus.select(*index_cols)
-    similar = _similar_incidents(got["query_vecs"], index.collect(), k)
+    similar = _similar_incidents(encode_texts(got["texts"], dim),
+                                 index.collect(), k)
     meta_type = narrowed.schema["first"].dataType
     schema = StructType(
         [meta_type[c] for c in _META]
@@ -136,10 +125,40 @@ def process_incident_batch(batch: DataFrame, corpus: DataFrame,
     return llm_out
 
 
+def _narrow(batch: DataFrame, batch_size: int) -> DataFrame:
+    """The window's one Spark action, as a one-row frame: dedup → redact
+    → pick → one aggregate holding the row count, the prompt, the sorted
+    ``batch_logs``, the earliest row's metadata and each picked row's
+    embedding text. No Python stage sits above the pick, so it plans as
+    ``TakeOrderedAndProject``."""
+    arr = batch.withColumn("__arrival", F.monotonically_increasing_id())
+    deduped = dedup_keep_first(arr, ["message", "timestamp"],
+                               "__arrival").drop("__arrival")
+    clean = deduped.withColumn(
+        "message", redact("message", DEFAULT_PATTERNS + LLM_SIDE_PATTERNS))
+    picked = pick_batch(clean, batch_size, "timestamp")
+    # ISO timestamp for the entry: day-partitions the history sink and
+    # matches the reference's string timestamps (main.py:79-87)
+    log_cols = [c for c in clean.columns if c != "timestamp"] + ["timestamp"]
+    rows = (picked.withColumnRenamed("timestamp", "__ts_ms")
+            .withColumn("timestamp", F.date_format(
+                F.timestamp_millis(F.col("__ts_ms")),
+                "yyyy-MM-dd'T'HH:mm:ss'Z'")))
+    return rows.agg(
+        F.count("*").alias("n"),
+        prompt_col().alias("prompt"),
+        sorted_struct_array(*log_cols).alias("batch_logs"),
+        # the earliest row's metadata; the epoch-ms key orders it
+        F.min(F.struct("__ts_ms", *_META)).alias("first"),
+        F.collect_list(embed_input(["message", "level"])).alias("texts"))
+
+
 def _similar_incidents(query_vecs: list, index: list, k: int) -> list:
     """Index rows (``hist_id`` first) in any query's exact cosine top-k,
     sorted by ``hist_id`` — ``knn_join``'s result, with its id
-    tie-break, joined back to the index rows."""
+    tie-break and its drop of NaN scores (a zero vector, e.g. the empty
+    text of a row with NULL ``message`` and ``level``), joined back to
+    the index rows."""
     import numpy as np
 
     if not index:
@@ -147,8 +166,8 @@ def _similar_incidents(query_vecs: list, index: list, k: int) -> list:
     index = sorted(index, key=lambda r: r[0])
     cmat = np.array([r["embedding"] for r in index], dtype=np.float64)
     qmat = np.array(query_vecs, dtype=np.float64)
-    idx, _ = block_topk(qmat, cmat, k, "cosine")
-    return [index[i] for i in np.unique(idx)]
+    idx, top = block_topk(qmat, cmat, k, "cosine")
+    return [index[i] for i in np.unique(idx[~np.isnan(top)])]
 
 
 def incident_stream(spark, source_options: dict, corpus: DataFrame,

@@ -9,6 +9,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+import ai_incident_analyst_spark.streaming.incident_loop as loop
 from ai_incident_analyst_spark.operators.embedding import embed_text
 from ai_incident_analyst_spark.streaming.incident_loop import (
     incident_stream,
@@ -214,31 +215,32 @@ def test_streamed_history_feeds_dashboard_and_feedback(spark, tmp_path):
     assert all(r.feedback is None for r in other)
 
 
-@pytest.mark.parametrize("k", [1, 2])
-def test_picked_rows_and_knn_match_reference(spark, tmp_path, k):
-    """A window larger than ``batch_size``: the entry holds the
-    ``batch_size`` earliest rows left after dedup, and its similar
-    incidents are exactly what the reference ``knn_join`` returns for
-    those rows — including an exact score tie between two identical
-    index vectors, which goes to the lower ``hist_id``."""
-    from ai_incident_analyst_spark.operators.knn import knn_join
+def _row(minute, level, svc, msg):
+    return (T0 + minute * 60_000, level, svc, msg, "e", "ns")
+
+
+def _window(spark):
+    """Seven distinct rows at minutes 1-5 plus one exact duplicate, in
+    an arrival order that is not time order; one row has a NULL
+    ``level`` and one a NULL ``message``."""
     from ai_incident_analyst_spark.sources.logapi import DEFAULT_SCHEMA
 
-    def row(minute, level, svc, msg):
-        return (T0 + minute * 60_000, level, svc, msg, "e", "ns")
+    return spark.createDataFrame([
+        _row(5, "error", "svc-disk", "disk full on node 3"),
+        _row(1, "error", "svc-db", "db timeout for a@b.com"),
+        _row(4, "info", "svc-q", "slow query on shard 2"),
+        _row(1, "error", "svc-db", "db timeout for a@b.com"),  # exact dup
+        _row(3, "warn", "svc-oom", "OOM killed worker 7"),
+        _row(2, "error", "svc-net", "conn reset by peer"),
+        _row(2, None, "svc-mq", "queue stalled on broker 1"),
+        _row(3, "warn", "svc-null", None),
+    ], DEFAULT_SCHEMA)
 
-    rows = [  # arrival order is not time order
-        row(5, "error", "svc-disk", "disk full on node 3"),
-        row(1, "error", "svc-db", "db timeout for a@b.com"),
-        row(4, "info", "svc-q", "slow query on shard 2"),
-        row(1, "error", "svc-db", "db timeout for a@b.com"),  # exact dup
-        row(3, "warn", "svc-oom", "OOM killed worker 7"),
-        row(2, "error", "svc-net", "conn reset by peer"),
-    ]
-    batch = spark.createDataFrame(rows, DEFAULT_SCHEMA)
-    # 301 and 300 embed identically and match the conn-reset row
-    # (embedded as "message level") with cosine 1
-    corpus = embed_text(
+
+def _index(spark):
+    """Prior incidents; 301 and 300 embed identically and match the
+    conn-reset row (embedded as "message level") with cosine 1."""
+    return embed_text(
         spark.createDataFrame(
             [(301, "conn reset by peer error"),
              (300, "conn reset by peer error"),
@@ -247,27 +249,101 @@ def test_picked_rows_and_knn_match_reference(spark, tmp_path, k):
              (304, "disk full on node 3 error")],
             "hist_id long, message string"),
         ["message"], dim=32).select("hist_id", "embedding")
+
+
+def test_narrowing_plans_pick_as_take_ordered(spark):
+    """The window's one action has no Python stage: the pick plans as
+    ``TakeOrderedAndProject``, with no range-partitioned sort (and its
+    sampling job) and no Arrow or batch Python evaluation."""
+    narrowed = loop._narrow(_window(spark), 5)
+    plan = narrowed._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan, plan
+    for op in ("ArrowEvalPython", "BatchEvalPython", "rangepartitioning"):
+        assert op not in plan, plan
+
+
+def test_window_starts_at_most_four_jobs(spark, tmp_path, jobs_of):
+    """One static window with a cached index: the narrowing action, the
+    index collect and the history append, four jobs in all."""
+    index = _index(spark).cache()
+    index.count()
     hist = str(tmp_path / "history")
-    out = process_incident_batch(batch, corpus, lambda p: "RCA", hist,
-                                 batch_size=3, k=k)
+    out, jobs = jobs_of(spark, lambda: process_incident_batch(
+        _window(spark), index, lambda p: "RCA", hist, batch_size=5))
+    index.unpersist()
+    assert out == "RCA"
+    assert len(jobs) <= 4, jobs
+
+
+@pytest.mark.parametrize("k", [1, 2])
+def test_picked_rows_and_knn_match_reference(spark, tmp_path, monkeypatch,
+                                             k):
+    """A window larger than ``batch_size``: the entry holds the
+    ``batch_size`` earliest rows left after dedup, the query vectors the
+    driver encodes equal ``embed_text``'s for those rows bit for bit
+    (NULL ``level`` and NULL ``message`` included), and its similar
+    incidents are exactly what the reference ``knn_join`` returns for
+    those rows — including an exact score tie between two identical
+    index vectors, which goes to the lower ``hist_id``."""
+    import numpy as np
+
+    from ai_incident_analyst_spark.operators.knn import knn_join
+
+    seen, similar = [], loop._similar_incidents
+
+    def spy(query_vecs, index, k):
+        seen.append(query_vecs)
+        return similar(query_vecs, index, k)
+
+    monkeypatch.setattr(loop, "_similar_incidents", spy)
+    corpus = _index(spark)
+    hist = str(tmp_path / "history")
+    out = process_incident_batch(_window(spark), corpus, lambda p: "RCA",
+                                 hist, batch_size=5, k=k)
     assert out == "RCA"
     (entry,) = spark.read.parquet(hist).collect()
 
     want_ts = [time.strftime("%Y-%m-%dT%H:%M:%SZ",
                              time.gmtime((T0 + m * 60_000) / 1000))
-               for m in (1, 2, 3)]
+               for m in (1, 2, 2, 3, 3)]
     assert sorted(b.timestamp for b in entry.batch_logs) == want_ts
     assert entry.timestamp == want_ts[0]
     assert entry.container_name == "svc-db"
+    assert {b.container_name for b in entry.batch_logs} == \
+        {"svc-db", "svc-net", "svc-mq", "svc-oom", "svc-null"}
 
     picked = spark.createDataFrame(
         [(b.message, b.level) for b in entry.batch_logs],
         "message string, level string")
-    q = embed_text(picked, ["message", "level"], dim=32).select(
-        F.monotonically_increasing_id().alias("query_id"),
-        F.col("embedding").alias("query_vec"))
+    emb = embed_text(picked, ["message", "level"], dim=32)
+    (driver_vecs,) = seen
+    # the encoder's own float32 arrays, not vectors collected from Spark
+    assert all(isinstance(v, np.ndarray) and v.dtype == np.float32
+               for v in driver_vecs)
+    assert sorted(v.tobytes() for v in driver_vecs) == sorted(
+        np.asarray(r.embedding, dtype=np.float32).tobytes()
+        for r in emb.collect())
+
+    q = emb.select(F.monotonically_increasing_id().alias("query_id"),
+                   F.col("embedding").alias("query_vec"))
     ref = knn_join(q, corpus, k=k, metric="cosine",
                    corpus_id="hist_id", corpus_vec="embedding")
     want_ids = sorted({r.vec_id for r in ref.collect()})
     assert [s.hist_id for s in entry.similar_logs] == want_ids
     assert 300 in want_ids and (k == 2) == (301 in want_ids)
+
+
+def test_empty_text_row_adds_no_similar_incident(spark, tmp_path):
+    """A row with NULL ``message`` and ``level`` embeds as a zero vector,
+    whose cosine scores are all NaN: like ``knn_join``, the loop keeps
+    no index row for it, so only the disk row's match is stored."""
+    from ai_incident_analyst_spark.sources.logapi import DEFAULT_SCHEMA
+
+    batch = spark.createDataFrame(
+        [_row(1, "error", "svc-disk", "disk full on node 3"),
+         _row(2, None, "svc-blank", None)], DEFAULT_SCHEMA)
+    hist = str(tmp_path / "history")
+    process_incident_batch(batch, _index(spark), lambda p: "RCA", hist)
+    (entry,) = spark.read.parquet(hist).collect()
+    assert len(entry.batch_logs) == 2
+    assert [s.hist_id for s in entry.similar_logs] == [304]

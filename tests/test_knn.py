@@ -312,6 +312,29 @@ def test_lsh_cosine_recall_vs_exact(spark, sf_dir):
     assert md5_recall >= 0.6, md5_recall
 
 
+def test_lsh_cosine_drops_dirty_rows(spark):
+    """A NULL or not-``dim``-long vector on either side drops its row
+    instead of failing the bucketing worker: the join over the dirty
+    corpus equals the join over its clean rows."""
+    from ai_incident_analyst_spark.operators.knn import lsh_cosine_knn_join
+
+    q = spark.createDataFrame(
+        [(10, [0.9, 0.1, 0.0]), (11, [0.1, 0.8, 0.1]), (12, None)],
+        "query_id long, query_vec array<double>")
+    dirty = _dirty_corpus(spark).filter(F.col("vec_id") != 4)
+    clean = dirty.filter(F.col("vec_id").isin(1, 5, 6))
+
+    def run(c):
+        return sorted((r.query_id, r.vec_id, round(r.distance, 9))
+                      for r in lsh_cosine_knn_join(
+                          q, c, k=10, n_planes=2, n_tables=1,
+                          dim=3).collect())
+
+    got = run(dirty)
+    assert got == run(clean)
+    assert {qid for qid, _, _ in got} == {10, 11}
+
+
 def test_md5_planes_portable_derivation():
     """Every component reproduces the documented md5 integer formula
     (what the DuckDB twin regenerates)."""

@@ -35,6 +35,19 @@ def test_rp_project_matches_numpy(spark):
         assert np.array_equal(got[i], exp[i])
 
 
+def test_rp_project_drops_dirty_rows(spark):
+    """A NULL or not-``d_in``-long vector drops its row instead of
+    failing the Python worker; the clean row projects as usual."""
+    df = spark.createDataFrame(
+        [(1, [1.0, -2.0, 0.5]), (2, None), (3, [1.0, 0.0])],
+        "id long, x array<double>")
+    rows = rp_project(df, "x", 3, 2).collect()
+    assert [r["id"] for r in rows] == [1]
+    exp = np.round((np.array([1.0, -2.0, 0.5]) @ jl_signs(3, 2))
+                   / np.sqrt(2), 6)
+    assert np.array_equal(np.array(rows[0]["proj"]), exp)
+
+
 def test_rp_preserves_distances_approximately(spark):
     # JL guarantee sanity: relative pairwise-distance distortion stays
     # bounded for a generous d_out
