@@ -26,12 +26,15 @@ _REL = re.compile(r"^\s*(\d+)\s+(second|minute|hour|day|week)s?\s+ago\s*$", re.I
 
 def time_point(when: str, now: Column | None = None) -> Column:
     """An NRQL time point as a Column: relative "<n> <unit> ago" anchored
-    to ``now`` (or current_timestamp), else an absolute literal."""
+    to ``now`` (or current_timestamp), all digits as epoch milliseconds
+    (the form ``sources/logapi.py`` writes), else an absolute literal."""
     m = _REL.match(when)
     if m:
         qty, unit = int(m.group(1)), m.group(2).upper()
         anchor = now if now is not None else F.current_timestamp()
         return anchor - F.expr(f"INTERVAL {qty} {unit}")
+    if when.strip().isdecimal():
+        return F.timestamp_millis(F.lit(int(when)))
     return F.to_timestamp(F.lit(when))
 
 
@@ -66,10 +69,10 @@ class LogQuery:
         return self._and(~F.col(col).like(pattern))
 
     def since(self, when: str, now: Column | None = None) -> "LogQuery":
-        return self._and(F.col(self._ts) >= self._time_point(when, now))
+        return self._and(F.col(self._ts) >= time_point(when, now))
 
     def until(self, when: str, now: Column | None = None) -> "LogQuery":
-        return self._and(F.col(self._ts) <= self._time_point(when, now))
+        return self._and(F.col(self._ts) <= time_point(when, now))
 
     def order_by(self, *cols: Column) -> "LogQuery":
         self._order = list(cols)
@@ -80,9 +83,6 @@ class LogQuery:
         return self
 
     # -- evaluation ---------------------------------------------------------
-    def _time_point(self, when: str, now: Column | None) -> Column:
-        return time_point(when, now)
-
     def df(self) -> DataFrame:
         out = self._df
         if self._pred is not None:

@@ -4,9 +4,9 @@ directly into LogQuery plans.
 The reference's entire user-facing query surface is an NRQL string
 (``src/ingestion/new_relic_fetcher.py:70-80`` composes one; ``main.py:19-25``
 rewrites one with regexes). A user switching to this engine can hand those
-same strings to ``parse_nrql`` and get a DataFrame plan with the clauses
+same strings to ``run_nrql`` and get a DataFrame plan with the clauses
 mapped declaratively — no string surgery downstream, and the time-window
-"rewrite" (main.py:21-25) becomes just calling ``since/until`` again.
+"rewrite" (main.py:21-25) becomes just another SINCE/UNTIL.
 
 Dialect (the subset the reference emits, exactly):
 
@@ -16,7 +16,7 @@ Dialect (the subset the reference emits, exactly):
                                              --   uniqueCount(c) |
                                              --   percentile(c, p) |
                                              --   latest(c) |
-                                             --   filter(agg, WHERE conds) |
+                                             --   filter(agg, WHERE bool) |
                                              --   histogram(c, ceil, nbkt) |
                                              --   rate(agg, <n> <unit>)
     FROM Table[, Table2 …]
@@ -29,8 +29,8 @@ Dialect (the subset the reference emits, exactly):
                         --   `col` IN ('v1', 'v2', …)
                         --   `col` IS [NOT] NULL
     [FACET `c1`[, `c2` …]]
-    [SINCE <n> <unit> ago | SINCE '<ts>']
-    [UNTIL '<ts>']
+    [SINCE <n> <unit> ago | SINCE '<ts>' | SINCE <epoch-ms>]
+    [UNTIL '<ts>' | UNTIL <epoch-ms>]
     [COMPARE WITH <n> <unit> ago]            -- current vs shifted window,
                                              --   tagged by a `period` col
     [LIMIT n]
@@ -39,15 +39,20 @@ Dialect (the subset the reference emits, exactly):
 The reference emits only the first three clause groups plus SINCE/UNTIL/
 LIMIT (``new_relic_fetcher.py:70-80``); FACET/TIMESERIES cover the
 dashboard's group-count metrics (``app.py:22-33``) in the same dialect a
-New Relic user would write them. ``sum``/``average`` aggregate through
-DECIMAL(27,4) and cast back to double: exact, order-insensitive results
-(a straight double sum varies with partition merge order). Not
-supported: nested functions, quoted strings containing the literal
-clause keywords. Keywords are case-insensitive; values are preserved.
+New Relic user would write them. The epoch-ms time points are the form
+``sources/logapi.py`` writes for each fetch window. ``sum``/``average``
+aggregate through DECIMAL(27,4) and cast back to double: exact,
+order-insensitive results (a straight double sum varies with partition
+merge order). Not supported: nested functions, quoted strings containing
+the literal clause keywords. Keywords are case-insensitive; values are
+preserved.
 
-The reference itself only ever ANDs WHERE clauses
-(``new_relic_fetcher.py:74-78``); OR + parens are the Spark-side
-superset any real NRQL user hits immediately.
+One compiler per clause kind: ``parse_where`` parses every WHERE (the
+query's and each ``filter()``'s) into one boolean tree, ``_where_pred``
+compiles that tree to a Catalyst predicate, and ``_agg_expr`` builds every
+aggregate, plain or guarded by a ``filter()`` condition. The reference
+itself only ever ANDs WHERE clauses (``new_relic_fetcher.py:74-78``); OR +
+parens are the Spark-side superset any real NRQL user hits immediately.
 """
 
 from __future__ import annotations
@@ -75,7 +80,7 @@ _CLAUSES = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 
-#: NRQL aggregate → (spark builder, output column namer)
+#: the plain NRQL aggregates (lower-cased names) that ``_agg_expr`` builds
 _AGG_FNS = {
     "count", "sum", "average", "min", "max", "uniquecount",
     "percentile", "latest",
@@ -143,7 +148,6 @@ class ParsedNRQL:
     since: str | None
     until: str | None
     limit: int | None = None
-    is_count: bool = field(default=False)
     aggs: list[tuple[str, str, str | None]] = field(
         default_factory=list)  # (fn, arg, pct-or-None)
     facet: list[str] = field(default_factory=list)
@@ -152,22 +156,6 @@ class ParsedNRQL:
     #: WHERE boolean tree: ("cond", col, OP, val) | ("and", (nodes…)) |
     #: ("or", (nodes…)); None when the query has no WHERE
     where: tuple | None = None
-
-    @property
-    def conds(self) -> list[tuple[str, str, str]]:
-        """Back-compat flat (col, OP, val) list — defined ONLY when the
-        WHERE is a pure AND chain of the four classic string ops the
-        reference emits. Any other shape (OR, parens, numeric, IN,
-        IS NULL) RAISES: a legacy consumer that reads only ``.conds``
-        must fail loudly rather than silently apply no filter and
-        process unfiltered data. New consumers use ``.where``."""
-        flat = _flat_and_leaves(self.where)
-        if self.where is not None and not flat:
-            raise ValueError(
-                "this query's WHERE contains OR/parens/numeric/IN/"
-                "IS NULL conditions that the flat .conds list cannot "
-                "represent; consume the .where tree instead")
-        return flat
 
 
 def _split_top(s: str) -> list[str]:
@@ -292,29 +280,6 @@ def parse_where(s: str) -> tuple:
     return tree
 
 
-#: the classic four ops the reference itself emits — only these flatten
-#: into the ParsedNRQL.conds triple list (back-compat surface); any other
-#: leaf type forces callers through the tree
-_CLASSIC_OPS = {"=", "!=", "LIKE", "NOT LIKE"}
-
-
-def _flat_and_leaves(tree: tuple | None) -> list[tuple[str, str, str]]:
-    """The (col, OP, val) leaves when the tree is a pure AND chain of
-    classic string conditions; [] otherwise (callers then must consult
-    the tree — a partial flat list would silently drop predicates)."""
-    def classic(c):
-        return (c[0] == "cond" and c[2] in _CLASSIC_OPS
-                and isinstance(c[3], str))
-
-    if tree is None:
-        return []
-    if tree[0] == "cond":
-        return [tree[1:]] if classic(tree) else []
-    if tree[0] == "and" and all(classic(c) for c in tree[1]):
-        return [c[1:] for c in tree[1]]
-    return []
-
-
 def _parse_plain_agg(p: str) -> tuple[str, str, str | None] | None:
     am = _AGG.match(p)
     if not am:
@@ -332,7 +297,7 @@ def _parse_agg(p: str):
     """One SELECT item as an agg tuple, or None if it isn't an aggregate.
 
     Plain aggs are ``(fn, arg, pct)``; composites reuse the 3-slot shape:
-    ``("filter", inner_tuple, conds_tuple)``,
+    ``("filter", inner_tuple, where_tree)``,
     ``("histogram", attr, (ceiling, buckets))``,
     ``("rate", inner_tuple, (n, unit))``.
     """
@@ -376,7 +341,6 @@ def parse_nrql(query: str) -> ParsedNRQL:
         parsed = [_parse_agg(p) for p in sel_parts]
         if all(a is not None for a in parsed):
             aggs = parsed
-    is_count = aggs == [("count", "*", None)]
     if aggs:
         select: list[str] = []
     elif sel_raw == "*":
@@ -402,7 +366,7 @@ def parse_nrql(query: str) -> ParsedNRQL:
         select=select, tables=tables,
         since=_unquote(m.group("since")), until=_unquote(m.group("until")),
         limit=int(m.group("limit")) if m.group("limit") else None,
-        is_count=is_count, aggs=aggs, facet=facet,
+        aggs=aggs, facet=facet,
         timeseries=(re.sub(r"\s+", " ", m.group("timeseries").strip())
                     if m.group("timeseries") else None),
         compare_with=(re.sub(r"\s+", " ", m.group("compare").strip())
@@ -411,84 +375,37 @@ def parse_nrql(query: str) -> ParsedNRQL:
     )
 
 
+#: WHERE leaf op → predicate over (column, ``_parse_leaf`` payload)
+_LEAF_PRED = {
+    "=": lambda c, v: c == F.lit(v),
+    "!=": lambda c, v: c != F.lit(v),
+    "<": lambda c, v: c < F.lit(v),
+    "<=": lambda c, v: c <= F.lit(v),
+    ">": lambda c, v: c > F.lit(v),
+    ">=": lambda c, v: c >= F.lit(v),
+    "LIKE": lambda c, v: c.like(v),
+    "NOT LIKE": lambda c, v: ~c.like(v),
+    "IN": lambda c, v: c.isin(list(v)),
+    "IS NULL": lambda c, v: c.isNull(),
+    "IS NOT NULL": lambda c, v: c.isNotNull(),
+}
+
+
 def _where_pred(tree: tuple) -> F.Column:
-    """Predicate Column from a ``parse_where`` tree. Top-level ANDs stay
-    separate conjuncts to Catalyst, so parquet pushdown splits them as
-    before; OR branches push down as a single disjunctive filter."""
+    """Predicate Column from a ``parse_where`` tree — the one WHERE
+    compiler, for the query's WHERE and every ``filter()`` condition.
+    Top-level ANDs stay separate conjuncts to Catalyst, so parquet
+    pushdown splits them; OR branches push down as a single disjunctive
+    filter."""
     kind = tree[0]
     if kind == "cond":
         _, col, op, val = tree
-        c = F.col(col)
-        if op == "=":
-            return c == F.lit(val)
-        if op == "!=":
-            return c != F.lit(val)
-        if op == "<":
-            return c < F.lit(val)
-        if op == "<=":
-            return c <= F.lit(val)
-        if op == ">":
-            return c > F.lit(val)
-        if op == ">=":
-            return c >= F.lit(val)
-        if op == "LIKE":
-            return c.like(val)
-        if op == "NOT LIKE":
-            return ~c.like(val)
-        if op == "IN":
-            return c.isin(list(val))
-        if op == "IS NULL":
-            return c.isNull()
-        if op == "IS NOT NULL":
-            return c.isNotNull()
-        raise ValueError(f"unsupported op {op!r}")  # pragma: no cover
+        return _LEAF_PRED[op](F.col(col), val)
     parts = [_where_pred(c) for c in tree[1]]
     out = parts[0]
     for p in parts[1:]:
         out = (out & p) if kind == "and" else (out | p)
     return out
-
-
-def _filtered_agg(inner: tuple, tree, ts_col: str) -> tuple[str, F.Column]:
-    """NRQL ``filter(agg, WHERE …)``: the aggregate over only the rows
-    matching the condition — a conditional aggregate, NOT a row filter, so
-    several filter() aggs with different conditions share one scan/pass.
-    Guard via when(): non-matching rows contribute NULL (skipped by every
-    aggregate), matching DuckDB's ``agg(CASE WHEN cond THEN x END)``.
-    """
-    fn, arg, pct = inner
-    cond = _where_pred(tree)
-    if fn == "count" and arg == "*":
-        # ELSE 0 so an all-null group yields 0, like SQL's SUM(CASE…ELSE 0)
-        return "filter_count", F.sum(
-            F.when(cond, F.lit(1)).otherwise(F.lit(0))).cast("long")
-    g = F.when(cond, F.col(arg))
-    if fn == "count":
-        return f"filter_count_{arg}", F.count(g)
-    if fn == "uniquecount":
-        return f"filter_uniquecount_{arg}", F.countDistinct(g)
-    if fn == "sum":
-        return f"filter_sum_{arg}", (
-            F.sum(F.when(cond, F.col(arg).cast("decimal(27,4)")))
-            .cast("double"))
-    if fn == "average":
-        return f"filter_average_{arg}", (
-            F.sum(F.when(cond, F.col(arg).cast("decimal(27,4)")))
-            .cast("double") / F.count(g))
-    if fn == "min":
-        return f"filter_min_{arg}", F.min(g)
-    if fn == "max":
-        return f"filter_max_{arg}", F.max(g)
-    if fn == "percentile":
-        name = f"filter_percentile_{arg}_{pct.replace('.', '_')}"
-        return name, F.round(
-            F.percentile(F.when(cond, F.col(arg).cast("double")),
-                         F.lit(float(pct) / 100.0)), 6)
-    if fn == "latest":
-        return f"filter_latest_{arg}", F.max(
-            F.when(cond, F.struct(F.col(ts_col).alias("t"),
-                                  F.col(arg).alias("v"))))["v"]
-    raise ValueError(f"unsupported NRQL function in filter(): {fn}")
 
 
 def _histogram_agg(arg: str, ceiling: float,
@@ -525,11 +442,20 @@ def _rate_agg(inner: tuple, n: int, unit: str,
             col.cast("double") * F.lit(per) / window_secs.cast("double"))
 
 
-def _agg_expr(fn: str, arg: str, pct: str | None = None,
-              ts_col: str = "ts",
-              window_secs: F.Column | None = None) -> tuple[str, F.Column]:
+def _agg_expr(fn: str, arg, pct=None, ts_col: str = "ts",
+              window_secs: F.Column | None = None,
+              cond: F.Column | None = None) -> tuple[str, F.Column]:
+    """One SELECT aggregate as ``(output name, Column)``.
+
+    ``cond`` is a ``filter(agg, WHERE …)`` condition. It makes a
+    conditional aggregate, NOT a row filter, so several filter() aggs
+    with different conditions share one scan/pass: each aggregate's input
+    is guarded by ``when(cond, ·)``, non-matching rows contribute NULL
+    (skipped by every aggregate), matching DuckDB's
+    ``agg(CASE WHEN cond THEN x END)``, and the name gains ``filter_``.
+    """
     if fn == "filter":
-        return _filtered_agg(arg, pct, ts_col)
+        return _agg_expr(*arg, ts_col=ts_col, cond=_where_pred(pct))
     if fn == "histogram":
         return _histogram_agg(arg, pct[0], pct[1])
     if fn == "rate":
@@ -537,45 +463,55 @@ def _agg_expr(fn: str, arg: str, pct: str | None = None,
             raise ValueError(
                 "rate() needs SINCE (or TIMESERIES) to define the window")
         return _rate_agg(arg, pct[0], pct[1], window_secs)
-    if fn == "count":
-        name = "count" if arg == "*" else f"count_{arg}"
-        return name, (F.count("*") if arg == "*" else F.count(arg))
-    if fn == "uniquecount":
-        return f"uniquecount_{arg}", F.countDistinct(arg)
-    if fn == "sum":
+
+    def guard(c: F.Column) -> F.Column:
+        return c if cond is None else F.when(cond, c)
+
+    if fn == "count" and arg == "*":
+        # filtered: ELSE 0, so a group with no match counts 0 (and an
+        # empty global input sums to NULL), like SQL's SUM(CASE…ELSE 0)
+        name, out = "count", (
+            F.count("*") if cond is None else
+            F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).cast("long"))
+    elif fn == "count":
+        name, out = f"count_{arg}", F.count(guard(F.col(arg)))
+    elif fn == "uniquecount":
+        name, out = f"uniquecount_{arg}", F.countDistinct(guard(F.col(arg)))
+    elif fn == "sum":
         # DECIMAL(27,4) accumulate: order-insensitive exact sum (a double
         # sum's value depends on partition merge order), double on output
-        return f"sum_{arg}", (F.sum(F.col(arg).cast("decimal(27,4)"))
-                              .cast("double"))
-    if fn == "average":
+        name, out = f"sum_{arg}", (
+            F.sum(guard(F.col(arg).cast("decimal(27,4)"))).cast("double"))
+    elif fn == "average":
         # exact decimal sum, then ONE double division: IEEE division is
         # bit-identical across engines, while decimal division rounds at
         # an engine-chosen result scale (Spark picked 6 fractional digits
         # here vs DuckDB's 10 — observed value drift at the 7th digit)
-        return f"average_{arg}", ((F.sum(F.col(arg).cast("decimal(27,4)"))
-                                   .cast("double")) / F.count(arg))
-    if fn == "min":
-        return f"min_{arg}", F.min(arg)
-    if fn == "max":
-        return f"max_{arg}", F.max(arg)
-    if fn == "percentile":
+        name, out = f"average_{arg}", (
+            F.sum(guard(F.col(arg).cast("decimal(27,4)"))).cast("double")
+            / F.count(guard(F.col(arg))))
+    elif fn == "min":
+        name, out = f"min_{arg}", F.min(guard(F.col(arg)))
+    elif fn == "max":
+        name, out = f"max_{arg}", F.max(guard(F.col(arg)))
+    elif fn == "percentile":
         # NRQL's percentile is approximate server-side; we compute the
         # EXACT interpolated quantile (Spark `percentile`, one extra
         # shuffle of the grouped values) — a correctness superset with
         # identical DuckDB twin (quantile_cont). Rounded to 6dp so the
         # interpolation's last-bit FP noise can't flip a comparison.
         name = f"percentile_{arg}_{pct.replace('.', '_')}"
-        return name, F.round(
-            F.percentile(F.col(arg).cast("double"), F.lit(float(pct) / 100.0)),
-            6)
-    if fn == "latest":
+        out = F.round(F.percentile(guard(F.col(arg).cast("double")),
+                                   F.lit(float(pct) / 100.0)), 6)
+    elif fn == "latest":
         # value carried by the latest event; ties on the timestamp break
         # by the largest value (deterministic across engines, unlike a
         # bare max_by whose tie survivor is partition-order dependent)
-        return f"latest_{arg}", F.max(
-            F.struct(F.col(ts_col).alias("t"),
-                     F.col(arg).alias("v")))["v"]
-    raise ValueError(f"unsupported NRQL function: {fn}")
+        name, out = f"latest_{arg}", F.max(guard(
+            F.struct(F.col(ts_col).alias("t"), F.col(arg).alias("v"))))["v"]
+    else:
+        raise ValueError(f"unsupported NRQL function: {fn}")
+    return (name if cond is None else f"filter_{name}"), out
 
 
 def run_nrql(spark: SparkSession, query: str,
@@ -591,28 +527,24 @@ def run_nrql(spark: SparkSession, query: str,
     missing = [t for t in p.tables if t not in tables]
     if missing:
         raise KeyError(f"unknown tables {missing}; have {sorted(tables)}")
+    if p.compare_with and not p.aggs:
+        raise ValueError("COMPARE WITH requires an aggregate SELECT")
+    if p.compare_with and not p.since:
+        raise ValueError("COMPARE WITH requires SINCE")
     src = (tables[p.tables[0]] if len(p.tables) == 1
            else union_tables(*[tables[t] for t in p.tables]))
 
     lq = LogQuery(src, ts_col=ts_col)
     if p.where is not None:
-        # pure-AND trees are applied as separate conjuncts (unchanged
-        # pushdown shape); an OR tree becomes one disjunctive predicate.
-        # NB: probe with the helper, not p.conds — the property raises on
-        # non-classic trees by design (fail-loud back-compat surface)
-        flat = _flat_and_leaves(p.where)
-        if flat:
-            for col, op, val in flat:
-                if op == "=":
-                    lq = lq.where(col, val)
-                elif op == "!=":
-                    lq = lq.where_expr(F.col(col) != F.lit(val))
-                elif op == "LIKE":
-                    lq = lq.like(col, val)
-                elif op == "NOT LIKE":
-                    lq = lq.not_like(col, val)
-        else:
-            lq = lq.where_expr(_where_pred(p.where))
+        # top-level ANDs stay separate conjuncts, so the parquet scan gets
+        # one pushed filter per condition; an OR pushes as one predicate
+        lq = lq.where_expr(_where_pred(p.where))
+    # the window bounds: without UNTIL, a SINCE window ends at ``now``
+    # for COMPARE WITH and rate(), while the row filter stays one-sided
+    start = time_point(p.since, now) if p.since else None
+    end = time_point(p.until, now) if p.until else None
+    if start is not None and end is None:
+        end = now if now is not None else F.current_timestamp()
     facet = list(p.facet)
     if p.compare_with:
         # COMPARE WITH <n> <unit> ago: evaluate the aggregate over the
@@ -623,35 +555,27 @@ def run_nrql(spark: SparkSession, query: str,
         # offset is smaller than the window width, so a single-pass
         # when() tag would drop rows); each side gets its own pushed-down
         # parquet predicate.
-        if not p.aggs:
-            raise ValueError("COMPARE WITH requires an aggregate SELECT")
-        if not p.since:
-            raise ValueError("COMPARE WITH requires SINCE")
         mm = _REL.match(p.compare_with)
         if not mm:
             raise ValueError(
                 f"unparseable COMPARE WITH offset: {p.compare_with!r}")
         delta = F.expr(
             f"INTERVAL {int(mm.group(1))} {mm.group(2).upper()}")
-        anchor = now if now is not None else F.current_timestamp()
-        cur_start = time_point(p.since, now)
-        cur_end = time_point(p.until, now) if p.until else anchor
         ts = F.col(ts_col)
         base = lq.df()
         out = (
-            base.filter((ts >= cur_start) & (ts <= cur_end))
+            base.filter((ts >= start) & (ts <= end))
             .withColumn("period", F.lit("current"))
             .unionByName(
-                base.filter((ts >= cur_start - delta)
-                            & (ts <= cur_end - delta))
+                base.filter((ts >= start - delta) & (ts <= end - delta))
                 .withColumn("period", F.lit("previous")))
         )
         facet = ["period"] + facet
     else:
-        if p.since:
-            lq = lq.since(p.since, now=now)
+        if start is not None:
+            lq = lq.where_expr(F.col(ts_col) >= start)
         if p.until:
-            lq = lq.until(p.until, now=now)
+            lq = lq.where_expr(F.col(ts_col) <= end)
         if p.select and p.select != ["*"]:
             lq = lq.select(*p.select)
         if p.limit is not None and not p.aggs:
@@ -659,19 +583,14 @@ def run_nrql(spark: SparkSession, query: str,
         out = lq.df()
     if p.aggs:
         wsec: F.Column | None = None
-        if any(fn == "rate" for fn, _, _ in p.aggs):
-            if p.timeseries:
-                # per-bucket rate: scale by the tumbling bucket width
-                tn, tu = p.timeseries.split()
-                wsec = F.lit(int(tn) * _UNIT_SECONDS[tu.lower().rstrip("s")])
-            elif p.since:
-                # whole-window rate: seconds between the window bounds —
-                # an expression of literals, constant-folded by Catalyst
-                end = (time_point(p.until, now) if p.until
-                       else (now if now is not None
-                             else F.current_timestamp()))
-                wsec = (F.unix_timestamp(end)
-                        - F.unix_timestamp(time_point(p.since, now)))
+        if p.timeseries:
+            # per-bucket rate: scale by the tumbling bucket width
+            tn, tu = p.timeseries.split()
+            wsec = F.lit(int(tn) * _UNIT_SECONDS[tu.lower().rstrip("s")])
+        elif start is not None:
+            # whole-window rate: seconds between the window bounds —
+            # an expression of literals, constant-folded by Catalyst
+            wsec = F.unix_timestamp(end) - F.unix_timestamp(start)
         exprs = [_agg_expr(fn, arg, pct, ts_col, wsec)
                  for fn, arg, pct in p.aggs]
         keys: list = [F.col(c) for c in facet]

@@ -4694,7 +4694,7 @@ FROM events
 WHERE ts >= '2024-01-03 00:00:00' AND ts <= '2024-01-20 00:00:00'
 GROUP BY user_id
 """, doc="NRQL filter() conditional aggregates (plans/nrql.py:"
-         "_filtered_agg): four differently-conditioned aggregates share "
+         "_agg_expr): four differently-conditioned aggregates share "
          "ONE scan/shuffle pass via when() guards — at 100 TB this is one "
          "pass where naive per-filter subqueries would be four; exact "
          "decimal accumulation preserved inside the guard")

@@ -7,8 +7,8 @@ search prior incidents → LLM RCA → notify → append to history
 Re-expressed Spark-first: the ``logapi`` SimpleDataSourceStreamReader
 paces the fetch windows (offsets are epoch-ms watermarks, one
 ``batch_ms`` window per micro-batch — sources/logapi.py:270), and each
-micro-batch runs the SAME per-batch composition the batch e2e drives
-(tests/test_incident_e2e.py), appending one day-partitioned history
+micro-batch runs ``process_incident_batch``, the same function a
+per-window batch replay calls, appending one day-partitioned history
 entry per non-empty window.
 
 Why ``foreachBatch`` and not a pure streaming DAG: the loop body needs
@@ -19,12 +19,13 @@ LLM call per batch) — exactly the micro-batch-as-batch escape hatch
 Per window, ONE Spark action narrows the batch to its ≤ ``batch_size``
 picked rows and returns everything the rest of the loop needs (prompt,
 ``batch_logs``, first-row metadata, each picked row's embedding text,
-row count): dedup → redact → pick → one aggregate. The driver then
+row count): dedup → pick → redact → one aggregate. The driver then
 embeds those ≤ ``batch_size`` texts with ``encode_texts``, the encode
 step the ``embed_text`` UDF runs, so the query vectors equal the UDF's
 bit for bit. The embedding is a row-wise function of ``message`` and
 ``level`` and pick orders by ``timestamp`` alone, so only kept rows are
-embedded. Embedding after the action and not in the plan keeps the pick
+embedded; redaction is row-wise too, so only kept rows are redacted.
+Embedding after the action and not in the plan keeps the pick
 a ``TakeOrderedAndProject``: a Python stage above ``orderBy().limit()``
 turns it into a range-partitioned full sort with a local and a global
 limit around the Python stage (7 jobs per window instead of 4). The
@@ -35,9 +36,10 @@ batch source is scanned once (stream progress reports the window's true
 Restart semantics: processed-window offsets live in the checkpoint, so
 a killed and restarted job resumes at the first unprocessed window and
 history gains exactly the missing entries — the incremental==batch
-identity proven by ``tests/test_incident_loop.py`` (stream run with a
-mid-stream restart vs per-window batch replay of
-``process_incident_batch`` produce identical history tables).
+identity checked by ``test_incident_loop_restart_equals_batch_replay``
+in ``tests/test_incident_loop.py`` (stream run with a mid-stream restart
+vs per-window batch replay of ``process_incident_batch`` produce
+identical history tables).
 
 At scale: each micro-batch is one bounded remote fetch; the corpus side
 of the k-NN is the (bounded) prior-incident index, collected to the
@@ -126,21 +128,23 @@ def process_incident_batch(batch: DataFrame, corpus: DataFrame,
 
 
 def _narrow(batch: DataFrame, batch_size: int) -> DataFrame:
-    """The window's one Spark action, as a one-row frame: dedup → redact
-    → pick → one aggregate holding the row count, the prompt, the sorted
-    ``batch_logs``, the earliest row's metadata and each picked row's
-    embedding text. No Python stage sits above the pick, so it plans as
-    ``TakeOrderedAndProject``."""
+    """The window's one Spark action, as a one-row frame: dedup → pick
+    → redact → one aggregate holding the row count, the prompt, the
+    sorted ``batch_logs``, the earliest row's metadata and each picked
+    row's embedding text. No Python stage sits above the pick, so it
+    plans as ``TakeOrderedAndProject``; the pick orders by ``timestamp``
+    alone and redaction is row-wise, so redacting only the kept rows
+    keeps the same rows."""
     arr = batch.withColumn("__arrival", F.monotonically_increasing_id())
     deduped = dedup_keep_first(arr, ["message", "timestamp"],
                                "__arrival").drop("__arrival")
-    clean = deduped.withColumn(
+    picked = pick_batch(deduped, batch_size, "timestamp")
+    clean = picked.withColumn(
         "message", redact("message", DEFAULT_PATTERNS + LLM_SIDE_PATTERNS))
-    picked = pick_batch(clean, batch_size, "timestamp")
     # ISO timestamp for the entry: day-partitions the history sink and
     # matches the reference's string timestamps (main.py:79-87)
     log_cols = [c for c in clean.columns if c != "timestamp"] + ["timestamp"]
-    rows = (picked.withColumnRenamed("timestamp", "__ts_ms")
+    rows = (clean.withColumnRenamed("timestamp", "__ts_ms")
             .withColumn("timestamp", F.date_format(
                 F.timestamp_millis(F.col("__ts_ms")),
                 "yyyy-MM-dd'T'HH:mm:ss'Z'")))

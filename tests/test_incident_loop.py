@@ -254,12 +254,18 @@ def _index(spark):
 def test_narrowing_plans_pick_as_take_ordered(spark):
     """The window's one action has no Python stage: the pick plans as
     ``TakeOrderedAndProject``, with no range-partitioned sort (and its
-    sampling job) and no Arrow or batch Python evaluation."""
+    sampling job) and no Arrow or batch Python evaluation. Redaction
+    runs on the kept rows only: no ``regexp_replace`` below the take."""
     narrowed = loop._narrow(_window(spark), 5)
     plan = narrowed._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
     for op in ("ArrowEvalPython", "BatchEvalPython", "rangepartitioning"):
         assert op not in plan, plan
+    take = narrowed._jdf.queryExecution().sparkPlan()
+    while take.nodeName() != "TakeOrderedAndProject":
+        take = take.children().apply(0)
+    assert "regexp_replace" in take.projectList().toString()
+    assert "regexp_replace" not in take.child().toString(), plan
 
 
 def test_window_starts_at_most_four_jobs(spark, tmp_path, jobs_of):

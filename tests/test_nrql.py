@@ -35,16 +35,19 @@ def test_parse_reference_default_query():
     assert p.select == ["level", "container_name", "message", "event",
                         "namespace_name"]
     assert p.tables == ["Log", "Log_dev1"]
-    assert ("namespace_name", "=", "betterworks-rainforest") in p.conds
-    assert ("message", "NOT LIKE", "%/health%") in p.conds
-    assert ("container_name", "LIKE", "%conversations%") in p.conds
-    assert len(p.conds) == 5
+    assert p.where[0] == "and" and len(p.where[1]) == 5
+    assert ("cond", "namespace_name", "=", "betterworks-rainforest") \
+        in p.where[1]
+    assert ("cond", "message", "NOT LIKE", "%/health%") in p.where[1]
+    assert ("cond", "container_name", "LIKE", "%conversations%") \
+        in p.where[1]
     assert p.since == "24 hours ago" and p.until is None and p.limit == 1000
 
 
 def test_parse_probe_and_windowed():
     p = parse_nrql(REFERENCE_PROBE)
-    assert p.is_count and p.tables == ["Log"] and p.limit == 1
+    assert p.aggs == [("count", "*", None)]
+    assert p.tables == ["Log"] and p.limit == 1
     w = parse_nrql(REFERENCE_WINDOWED)
     assert w.since == "2024-01-01 00:00:00"
     assert w.until == "2024-01-02 00:00:00"
@@ -117,7 +120,7 @@ def test_parse_facet_timeseries():
                       ("uniquecount", "user_id", None)]
     assert p.facet == ["event_type"]
     assert p.timeseries == "1 day"
-    assert p.conds == [("event_type", "=", "error")]
+    assert p.where == ("cond", "event_type", "=", "error")
 
 
 def test_facet_requires_aggregate():
@@ -326,17 +329,11 @@ def test_parse_where_errors():
 
 
 def test_parse_nrql_or_sets_tree_not_conds():
-    import pytest
     p = parse_nrql("SELECT * FROM Log WHERE `a` = '1' OR `b` = '2'")
-    # the flat list cannot represent an OR: reading it must fail LOUDLY
-    # (a stale consumer must never silently apply no filter)
-    with pytest.raises(ValueError, match="cannot represent"):
-        p.conds
     assert p.where == ("or", (("cond", "a", "=", "1"),
                               ("cond", "b", "=", "2")))
-    # pure-AND back-compat: conds stays flat AND where tree agrees
+    # a pure AND chain is one flat "and" node over its leaves
     q = parse_nrql("SELECT * FROM Log WHERE `a` = '1' AND `b` = '2'")
-    assert q.conds == [("a", "=", "1"), ("b", "=", "2")]
     assert q.where == ("and", (("cond", "a", "=", "1"),
                                ("cond", "b", "=", "2")))
 
@@ -383,12 +380,8 @@ def test_parse_where_extended_leaves():
     assert parse_where("`t` IS NULL") == ("cond", "t", "IS NULL", None)
     assert parse_where("`t` is not null") == \
         ("cond", "t", "IS NOT NULL", None)
-    # numeric-only leaves never flatten into the classic conds list:
-    # reading .conds raises, the tree is the consumable surface
-    import pytest
+    # a numeric leaf sits in the same tree as the string leaves
     p = parse_nrql("SELECT * FROM Log WHERE `a` = 'x' AND `v` > 9")
-    with pytest.raises(ValueError, match="cannot represent"):
-        p.conds
     assert p.where[0] == "and"
 
 
@@ -410,3 +403,51 @@ def test_run_extended_where_semantics(spark):
         "SELECT `id` FROM t WHERE `kind` IS NOT NULL AND (`v` <= 10 "
         "OR `v` >= 99)", {"t": df})
     assert {r.id for r in out3.collect()} == {2, 3}
+
+
+# --- epoch-ms time points and scan pushdown ---------------------------------
+
+def test_epoch_ms_window_from_logapi_spec(spark):
+    """The window form the logapi reader writes itself (``SINCE <ms>
+    UNTIL <ms>``) runs as inclusive epoch-ms bounds."""
+    from ai_incident_analyst_spark.sources.logapi import _QuerySpec
+
+    t0 = 1_700_000_000_000
+    df = spark.createDataFrame(
+        [(i, t0 + ms) for i, ms in enumerate(
+            [-1, 0, 1, 59_999, 60_000, 60_001])],
+        "id long, ms long").select(
+            "id", F.timestamp_millis("ms").alias("timestamp"))
+    spec = _QuerySpec(df.schema, {"since_ms": t0, "until_ms": t0 + 60_000})
+    query = spec.nrql(t0, t0 + 60_000)
+    assert query.endswith(f"SINCE {t0} UNTIL {t0 + 60_000}")
+    out = run_nrql(spark, query, {"Log": df}, ts_col="timestamp")
+    assert sorted(r.id for r in out.collect()) == [1, 2, 3, 4]
+
+
+def _pushed_filters(df) -> str:
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"PushedFilters: \[(.*?)\], ", plan)
+    assert m, plan
+    return m.group(1)
+
+
+def test_where_reaches_parquet_scan(spark, tmp_path):
+    """An AND chain reaches the parquet scan as one pushed filter per
+    condition; an OR pushes down as one disjunction."""
+    path = str(tmp_path / "logs")
+    _log_fixture(spark).write.parquet(path)
+    logs = spark.read.parquet(path)
+    pushed = _pushed_filters(run_nrql(
+        spark, "SELECT `message` FROM Log WHERE `level` = 'error' "
+        "AND `container_name` = 'billing'", {"Log": logs}))
+    assert "EqualTo(level,error)" in pushed, pushed
+    assert "EqualTo(container_name,billing)" in pushed, pushed
+    assert "And(" not in pushed, pushed
+    pushed = _pushed_filters(run_nrql(
+        spark, "SELECT `message` FROM Log WHERE `level` = 'info' "
+        "OR `container_name` = 'billing'", {"Log": logs}))
+    assert "Or(EqualTo(level,info),EqualTo(container_name,billing))" \
+        in pushed, pushed

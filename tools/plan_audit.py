@@ -12,10 +12,12 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ai_incident_analyst_spark.queries import REGISTRY
 from ai_incident_analyst_spark.session import get_spark
@@ -202,7 +204,7 @@ def main():
         f"literal) broadcast against the corpus — the acceptable "
         f"pattern in the header rule. Rows: " + ", ".join(nl_rows)
         + ".")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(REGISTRY)} queries)")
 

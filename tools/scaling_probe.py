@@ -14,15 +14,15 @@ drift).
 
 An sf1 column (10x the bench SF; data generated by tools/gen_testdata.py
 — a distributional twin of the driver data, see that file's header) is
-added for the SF1_QUERIES slow tail whenever /root/repo/testdata/sf1
-exists; set SPARK_GRAFT_PROBE_SF1=all to probe sf1 for every query.
-sf1 cells are single-run (the cost is 10x; the ratio test tolerates
-one-run noise within the same 20% allowance).
+added for the SF1_QUERIES slow tail whenever ``testdata/sf1`` exists
+under the repo root; set SPARK_GRAFT_PROBE_SF1=all to probe sf1 for
+every query. sf1 cells are single-run (the cost is 10x; the ratio test
+tolerates one-run noise within the same 20% allowance).
 
 An sf10 column (100x the bench SF: 60M lineitem / 10M events / 500k
 docs / 200k vectors) extends the measured record a SECOND decade for
-the curated SF10_QUERIES linear flagships whenever
-/root/repo/testdata/sf10 exists. The quadratic contrast shapes
+the curated SF10_QUERIES linear flagships whenever ``testdata/sf10``
+exists under the repo root. The quadratic contrast shapes
 (jw_part_pairs, fuzzy_part_pairs, ngram_jaccard_pairs,
 fs_customer_linkage, semantic_neardup) are deliberately excluded — sf1
 already measured their scale law and another decade would only burn
@@ -33,10 +33,12 @@ Usage: python tools/scaling_probe.py [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ai_incident_analyst_spark.queries import REGISTRY, clear_session_memos
 from ai_incident_analyst_spark.session import get_spark
@@ -47,8 +49,8 @@ SF_DIRS = {
     "sf0.01": "/root/testdata/sf0.01",
     "sf0.1": "/root/testdata/sf0.1",
     # generated twin (driver testdata stops at sf0.1 and is read-only)
-    "sf1": "/root/repo/testdata/sf1",
-    "sf10": "/root/repo/testdata/sf10",
+    "sf1": os.path.join(ROOT, "testdata", "sf1"),
+    "sf10": os.path.join(ROOT, "testdata", "sf10"),
 }
 
 #: flag threshold for the 0.01→0.1 wall-time ratio: 10× data growth plus
@@ -322,7 +324,6 @@ def _warm(spark):
 
 
 def main():
-    import os
     names = sys.argv[1:] or DEFAULT_QUERIES
     if os.path.isdir(SF_DIRS["sf10"]):
         # sf10 materializations (localCheckpointed LSH pair frames, 60M-row
@@ -477,7 +478,7 @@ def main():
     # the adjudications are not)
     marker = "## Adjudications"
     try:
-        with open("/root/repo/SCALING.md") as f:
+        with open(os.path.join(ROOT, "SCALING.md")) as f:
             old = f.read()
     except FileNotFoundError:
         old = ""
@@ -523,7 +524,7 @@ def main():
         lines = merged
     if marker in old:
         lines += ["", old[old.index(marker):].rstrip()]
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines[6:]))
 
