@@ -108,33 +108,23 @@ _UNIT_SECONDS = {"second": 1, "minute": 60, "hour": 3600,
                  "day": 86400, "week": 604800}
 
 _NUM = r"-?\d+(?:\.\d+)?"
-_COND = re.compile(
-    r"^\s*`?(?P<col>\w+)`?\s+"
-    rf"(?P<op>=|!=|<=|>=|<|>|NOT\s+LIKE|LIKE)\s+"
-    rf"(?:'(?P<val>[^']*)'|(?P<num>{_NUM}))\s*$",
-    re.IGNORECASE,
-)
-_COND_NULL = re.compile(
-    r"^\s*`?(?P<col>\w+)`?\s+IS\s+(?P<not>NOT\s+)?NULL\s*$", re.IGNORECASE)
-_COND_IN = re.compile(
-    r"^\s*`?(?P<col>\w+)`?\s+IN\s*\(\s*(?P<vals>'[^']*'"
-    r"(?:\s*,\s*'[^']*')*)\s*\)\s*$",
-    re.IGNORECASE)
 
-#: WHERE scanner: one token per step. ``\b`` after AND/OR keeps columns
-#: like `android` from matching the keyword; conditions are scanned whole
-#: so quoted values may contain parens/AND/OR freely.
+#: WHERE scanner: one token per step, and the leaf grammar itself — a
+#: ``cond`` token's named groups are what ``_parse_leaf`` reads. ``\b``
+#: after AND/OR keeps columns like `android` from matching the keyword;
+#: conditions are scanned whole so quoted values may contain
+#: parens/AND/OR freely. LIKE takes a quoted pattern only.
 _WHERE_TOKEN = re.compile(
     r"\s*(?:"
     r"(?P<lpar>\()|"
     r"(?P<rpar>\))|"
     r"(?P<and>AND\b)|"
     r"(?P<or>OR\b)|"
-    r"(?P<cond>`?\w+`?\s+(?:"
-    r"(?:NOT\s+)?LIKE\s+'[^']*'"
-    r"|IS\s+(?:NOT\s+)?NULL"
-    r"|IN\s*\(\s*'[^']*'(?:\s*,\s*'[^']*')*\s*\)"
-    rf"|(?:=|!=|<=|>=|<|>)\s+(?:'[^']*'|{_NUM})"
+    r"(?P<cond>`?(?P<col>\w+)`?\s+(?:"
+    r"IS\s+(?P<is_not>NOT\s+)?NULL"
+    r"|IN\s*\(\s*(?P<vals>'[^']*'(?:\s*,\s*'[^']*')*)\s*\)"
+    r"|(?P<op>=|!=|<=|>=|<|>|(?:NOT\s+)?LIKE(?=\s+'))\s+"
+    rf"(?:'(?P<val>[^']*)'|(?P<num>{_NUM}))"
     r"))"
     r")",
     re.IGNORECASE,
@@ -182,8 +172,10 @@ def _split_top(s: str) -> list[str]:
     return parts
 
 
-def _tokenize_where(s: str) -> list[tuple[str, str]]:
-    toks: list[tuple[str, str]] = []
+def _tokenize_where(s: str) -> list[tuple[str, object]]:
+    """``s`` as ``(kind, payload)`` tokens: a ``cond`` token carries its
+    parsed leaf, the others their text."""
+    toks: list[tuple[str, object]] = []
     pos = 0
     while pos < len(s):
         m = _WHERE_TOKEN.match(s, pos)
@@ -193,34 +185,31 @@ def _tokenize_where(s: str) -> list[tuple[str, str]]:
             break
         pos = m.end()
         kind = m.lastgroup
-        toks.append((kind, m.group(kind)))
+        toks.append((kind, _parse_leaf(m) if kind == "cond"
+                     else m.group(kind)))
     return toks
 
 
-def _parse_leaf(text: str) -> tuple:
-    """One WHERE condition as a ``("cond", col, OP, payload)`` node.
+def _parse_leaf(m: re.Match) -> tuple:
+    """One scanned WHERE condition as a ``("cond", col, OP, payload)``
+    node.
 
     Payload by OP: quoted ops → str; numeric comparison → int/float;
     ``IN`` → tuple of strs; ``IS [NOT] NULL`` → None.
     """
-    m = _COND_NULL.match(text)
-    if m:
-        op = "IS NOT NULL" if m.group("not") else "IS NULL"
-        return ("cond", m.group("col"), op, None)
-    m = _COND_IN.match(text)
-    if m:
+    col = m.group("col")
+    if m.group("vals") is not None:
         vals = tuple(v.strip()[1:-1] for v in _split_top(m.group("vals")))
-        return ("cond", m.group("col"), "IN", vals)
-    m = _COND.match(text)
-    if m:
-        op = re.sub(r"\s+", " ", m.group("op").upper())
-        if m.group("num") is not None:
-            raw = m.group("num")
-            val = int(raw) if re.fullmatch(r"-?\d+", raw) else float(raw)
-        else:
-            val = m.group("val")
-        return ("cond", m.group("col"), op, val)
-    raise ValueError(f"unparseable condition: {text!r}")
+        return ("cond", col, "IN", vals)
+    if m.group("op") is None:
+        op = "IS NOT NULL" if m.group("is_not") else "IS NULL"
+        return ("cond", col, op, None)
+    op = re.sub(r"\s+", " ", m.group("op").upper())
+    raw = m.group("num")
+    if raw is None:
+        return ("cond", col, op, m.group("val"))
+    return ("cond", col, op,
+            int(raw) if re.fullmatch(r"-?\d+", raw) else float(raw))
 
 
 def parse_where(s: str) -> tuple:
@@ -253,9 +242,8 @@ def parse_where(s: str) -> tuple:
             i += 1
             return node
         if kind == "cond":
-            leaf = _parse_leaf(toks[i][1])
             i += 1
-            return leaf
+            return toks[i - 1][1]
         raise ValueError(f"unparseable condition: {s!r}")
 
     def term() -> tuple:

@@ -28,10 +28,18 @@ embedded; redaction is row-wise too, so only kept rows are redacted.
 Embedding after the action and not in the plan keeps the pick
 a ``TakeOrderedAndProject``: a Python stage above ``orderBy().limit()``
 turns it into a range-partitioned full sort with a local and a global
-limit around the Python stage (7 jobs per window instead of 4). The
+limit around the Python stage (6 jobs per window instead of 3). The
 kNN, the LLM call and the entry row run on the driver too, and the
 batch source is scanned once (stream progress reports the window's true
 ``numInputRows``).
+
+What does not depend on a window's rows is built once per stream, in
+``LoopInvariants``: the prior-incident index is collected once, before
+the query starts, and kept on the driver as its rows and their float64
+matrix; the narrowing's Columns (redaction, ISO timestamp, prompt,
+``batch_logs``, first-row metadata, embedding text) and the history
+entry's type are built once too. A window is then 3 Spark jobs — the
+narrowing action's dedup exchange and take, and the history append.
 
 Restart semantics: processed-window offsets live in the checkpoint, so
 a killed and restarted job resumes at the first unprocessed window and
@@ -42,11 +50,11 @@ vs per-window batch replay of ``process_incident_batch`` produce
 identical history tables).
 
 At scale: each micro-batch is one bounded remote fetch; the corpus side
-of the k-NN is the (bounded) prior-incident index, collected to the
-driver as one matrix per window; the history append is a
-day-partitioned parquet write — no unbounded state
-lives in the stream itself, so the job's memory footprint is
-independent of how long it has been running.
+of the k-NN is the (bounded) prior-incident index, static for the
+stream's life and held on the driver as one matrix; the history append
+is a day-partitioned parquet write — no unbounded state lives in the
+stream itself, so the job's memory footprint is independent of how
+long it has been running.
 """
 
 from __future__ import annotations
@@ -81,24 +89,107 @@ from ..operators.rag import run_rag_batch  # noqa: F401
 _META = ("timestamp", "container_name", "namespace_name", "level")
 
 
-def process_incident_batch(batch: DataFrame, corpus: DataFrame,
+class LoopInvariants:
+    """Everything a window needs that does not depend on its rows, built
+    once per stream (or per batch replay) on the driver.
+
+    ``corpus`` is the prior-incident index ``(hist_id, embedding, …)``,
+    keyed by ``hist_id``; it is collected here, once, and held as its
+    rows sorted by ``hist_id`` and their float64 ``(n, dim)`` matrix.
+    Rows whose ``embedding`` is NULL or not ``dim`` long are dropped, by
+    ``knn._valid_rows``'s rule: the reference ``knn_join`` drops them
+    too. ``dim`` is the width the loop encodes its query texts at.
+
+    The narrowing's row-independent Columns (redaction, ISO timestamp,
+    prompt, ``batch_logs``, first-row metadata, embedding text) and the
+    history entry's type are built here too, for the batch schema they
+    were last asked for — a stream's windows all share one.
+    """
+
+    def __init__(self, corpus: DataFrame, dim: int = 32):
+        import numpy as np
+
+        index = corpus.select(
+            "hist_id", *[c for c in corpus.columns if c != "hist_id"])
+        self.dim = dim
+        self.index_type = index.schema
+        self.rows = sorted(
+            (r for r in index.collect()
+             if r["embedding"] is not None and len(r["embedding"]) == dim),
+            key=lambda r: r[0])
+        self.matrix = np.array([r["embedding"] for r in self.rows],
+                               dtype=np.float64).reshape(-1, dim)
+        self._batch_schema = None
+        self._project: list = []
+        self._aggs: list = []
+        self._entry_type: Optional[StructType] = None
+
+    def narrowing(self, schema: StructType) -> tuple[list, list]:
+        """The projection over the picked rows and the window's
+        aggregate, for batches of ``schema``: ``message`` redacted,
+        ``timestamp`` kept as the epoch-ms ``__ts_ms`` and re-emitted as
+        an ISO string (it day-partitions the history sink and matches the
+        reference's string timestamps, main.py:79-87)."""
+        if schema != self._batch_schema:
+            names = schema.names
+            ts = F.col("timestamp")
+            replaced = {
+                "message": redact("message",
+                                  DEFAULT_PATTERNS + LLM_SIDE_PATTERNS)
+                .alias("message"),
+                "timestamp": ts.alias("__ts_ms")}
+            self._project = [replaced.get(c, F.col(c)) for c in names] + [
+                F.date_format(F.timestamp_millis(ts),
+                              "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("timestamp")]
+            log_cols = [c for c in names if c != "timestamp"] + ["timestamp"]
+            self._aggs = [
+                F.count("*").alias("n"),
+                prompt_col().alias("prompt"),
+                sorted_struct_array(*log_cols).alias("batch_logs"),
+                # the earliest row's metadata; the epoch-ms key orders it
+                F.min(F.struct("__ts_ms", *_META)).alias("first"),
+                F.collect_list(embed_input(["message", "level"]))
+                .alias("texts")]
+            self._entry_type = None
+            self._batch_schema = schema
+        return self._project, self._aggs
+
+    def entry_type(self, narrowed: DataFrame) -> StructType:
+        """The history entry's type, read off the first ``narrowed``
+        frame of the current batch schema."""
+        if self._entry_type is None:
+            meta_type = narrowed.schema["first"].dataType
+            self._entry_type = StructType(
+                [meta_type[c] for c in _META]
+                + [StructField("batch_logs",
+                               narrowed.schema["batch_logs"].dataType),
+                   StructField("similar_logs", ArrayType(self.index_type)),
+                   StructField("llm_output", StringType()),
+                   StructField("feedback",
+                               StructType.fromDDL(FEEDBACK_TYPE))])
+        return self._entry_type
+
+
+def process_incident_batch(batch: DataFrame, prior: LoopInvariants,
                            llm_fn: Callable[[str], str],
                            history_path: str,
                            notify_fn: Optional[Callable[[str], bool]] = None,
-                           batch_size: int = 100, k: int = 1,
-                           dim: int = 32) -> Optional[str]:
+                           batch_size: int = 100,
+                           k: int = 1) -> Optional[str]:
     """One reference main-loop iteration over an already-fetched batch.
 
     ``batch`` carries the logapi schema (epoch-ms ``timestamp``,
-    ``level``, ``container_name``, ``message``); ``corpus`` is the
-    prior-incident index ``(hist_id, embedding)``, keyed by ``hist_id``.
+    ``level``, ``container_name``, ``message``); ``prior`` holds the
+    prior-incident index and the narrowing's Columns
+    (``LoopInvariants``, built once before the first window).
     Returns the LLM output, or None for an empty batch (no history entry
     — the reference skips runs that fetch nothing). Shared verbatim by
     the streaming loop and the batch replay so incremental == batch is
     an identity by construction.
     """
-    narrowed = _narrow(batch, batch_size)
-    got = narrowed.first()
+    narrowed = _narrow(batch, batch_size, prior)
+    # a global aggregate: always exactly one row
+    (got,) = narrowed.collect()
     if got["n"] == 0:
         return None
 
@@ -106,58 +197,38 @@ def process_incident_batch(batch: DataFrame, corpus: DataFrame,
     if notify_fn is not None:
         notify_fn(llm_out)
 
-    index_cols = ["hist_id"] + [c for c in corpus.columns if c != "hist_id"]
-    index = corpus.select(*index_cols)
-    similar = _similar_incidents(encode_texts(got["texts"], dim),
-                                 index.collect(), k)
-    meta_type = narrowed.schema["first"].dataType
-    schema = StructType(
-        [meta_type[c] for c in _META]
-        + [StructField("batch_logs", narrowed.schema["batch_logs"].dataType),
-           StructField("similar_logs", ArrayType(index.schema)),
-           StructField("llm_output", StringType()),
-           StructField("feedback", StructType.fromDDL(FEEDBACK_TYPE))])
+    similar = _similar_incidents(encode_texts(got["texts"], prior.dim),
+                                 prior, k)
     entry = local_frame(
         batch.sparkSession,
         [(*(got["first"][c] for c in _META), got["batch_logs"], similar,
-          llm_out, None)], schema)
+          llm_out, None)], prior.entry_type(narrowed))
     # namespace_name rides along so the stored table feeds the dashboard
     # surfaces (history_filter / history_metrics) unmodified
     append_history_partitioned(entry, history_path)
     return llm_out
 
 
-def _narrow(batch: DataFrame, batch_size: int) -> DataFrame:
+def _narrow(batch: DataFrame, batch_size: int,
+            prior: LoopInvariants) -> DataFrame:
     """The window's one Spark action, as a one-row frame: dedup → pick
     → redact → one aggregate holding the row count, the prompt, the
     sorted ``batch_logs``, the earliest row's metadata and each picked
     row's embedding text. No Python stage sits above the pick, so it
     plans as ``TakeOrderedAndProject``; the pick orders by ``timestamp``
     alone and redaction is row-wise, so redacting only the kept rows
-    keeps the same rows."""
+    keeps the same rows. Only the arrival id, a nondeterministic
+    expression, is built per window."""
+    project, aggs = prior.narrowing(batch.schema)
     arr = batch.withColumn("__arrival", F.monotonically_increasing_id())
     deduped = dedup_keep_first(arr, ["message", "timestamp"],
                                "__arrival").drop("__arrival")
     picked = pick_batch(deduped, batch_size, "timestamp")
-    clean = picked.withColumn(
-        "message", redact("message", DEFAULT_PATTERNS + LLM_SIDE_PATTERNS))
-    # ISO timestamp for the entry: day-partitions the history sink and
-    # matches the reference's string timestamps (main.py:79-87)
-    log_cols = [c for c in clean.columns if c != "timestamp"] + ["timestamp"]
-    rows = (clean.withColumnRenamed("timestamp", "__ts_ms")
-            .withColumn("timestamp", F.date_format(
-                F.timestamp_millis(F.col("__ts_ms")),
-                "yyyy-MM-dd'T'HH:mm:ss'Z'")))
-    return rows.agg(
-        F.count("*").alias("n"),
-        prompt_col().alias("prompt"),
-        sorted_struct_array(*log_cols).alias("batch_logs"),
-        # the earliest row's metadata; the epoch-ms key orders it
-        F.min(F.struct("__ts_ms", *_META)).alias("first"),
-        F.collect_list(embed_input(["message", "level"])).alias("texts"))
+    return picked.select(*project).agg(*aggs)
 
 
-def _similar_incidents(query_vecs: list, index: list, k: int) -> list:
+def _similar_incidents(query_vecs: list, prior: LoopInvariants,
+                       k: int) -> list:
     """Index rows (``hist_id`` first) in any query's exact cosine top-k,
     sorted by ``hist_id`` — ``knn_join``'s result, with its id
     tie-break and its drop of NaN scores (a zero vector, e.g. the empty
@@ -165,13 +236,11 @@ def _similar_incidents(query_vecs: list, index: list, k: int) -> list:
     the index rows."""
     import numpy as np
 
-    if not index:
+    if not prior.rows:
         return []
-    index = sorted(index, key=lambda r: r[0])
-    cmat = np.array([r["embedding"] for r in index], dtype=np.float64)
     qmat = np.array(query_vecs, dtype=np.float64)
-    idx, top = block_topk(qmat, cmat, k, "cosine")
-    return [index[i] for i in np.unique(idx[~np.isnan(top)])]
+    idx, top = block_topk(qmat, prior.matrix, k, "cosine")
+    return [prior.rows[i] for i in np.unique(idx[~np.isnan(top)])]
 
 
 def incident_stream(spark, source_options: dict, corpus: DataFrame,
@@ -190,6 +259,7 @@ def incident_stream(spark, source_options: dict, corpus: DataFrame,
 
     from ..sources.logapi import LogApiDataSource
 
+    prior = LoopInvariants(corpus, dim)
     spark.dataSource.register(LogApiDataSource)
     stream = (spark.readStream.format("logapi")
               .options(**source_options).load())
@@ -208,9 +278,9 @@ def incident_stream(spark, source_options: dict, corpus: DataFrame,
         marker = os.path.join(marker_dir, f"batch-{batch_id}")
         if os.path.exists(marker):
             return
-        out = process_incident_batch(batch_df, corpus, llm_fn,
+        out = process_incident_batch(batch_df, prior, llm_fn,
                                      history_path, notify_fn=notify_fn,
-                                     batch_size=batch_size, k=k, dim=dim)
+                                     batch_size=batch_size, k=k)
         with open(marker, "w") as f:
             f.write("" if out is None else "entry")
 

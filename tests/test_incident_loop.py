@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 import ai_incident_analyst_spark.streaming.incident_loop as loop
 from ai_incident_analyst_spark.operators.embedding import embed_text
 from ai_incident_analyst_spark.streaming.incident_loop import (
+    LoopInvariants,
     incident_stream,
     process_incident_batch,
 )
@@ -117,13 +118,14 @@ def test_incident_loop_restart_equals_batch_replay(spark, tmp_path):
     from ai_incident_analyst_spark.sources.logapi import LogApiDataSource
     spark.dataSource.register(LogApiDataSource)
     hist2 = str(tmp_path / "history_batch")
+    prior = LoopInvariants(corpus)
     for w in range(4):
         batch = (spark.read.format("logapi")
                  .option("fixture_path", fixture)
                  .option("since_ms", T0 + w * HOUR)
                  .option("until_ms", T0 + (w + 1) * HOUR)
                  .load())
-        process_incident_batch(batch, corpus, llm, hist2)
+        process_incident_batch(batch, prior, llm, hist2)
     want = spark.read.parquet(hist2).collect()
     assert len(want) == 3
     assert sorted(map(_entry_key, got)) == sorted(map(_entry_key, want))
@@ -256,7 +258,7 @@ def test_narrowing_plans_pick_as_take_ordered(spark):
     ``TakeOrderedAndProject``, with no range-partitioned sort (and its
     sampling job) and no Arrow or batch Python evaluation. Redaction
     runs on the kept rows only: no ``regexp_replace`` below the take."""
-    narrowed = loop._narrow(_window(spark), 5)
+    narrowed = loop._narrow(_window(spark), 5, LoopInvariants(_index(spark)))
     plan = narrowed._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
     for op in ("ArrowEvalPython", "BatchEvalPython", "rangepartitioning"):
@@ -275,10 +277,26 @@ def test_window_starts_at_most_four_jobs(spark, tmp_path, jobs_of):
     index.count()
     hist = str(tmp_path / "history")
     out, jobs = jobs_of(spark, lambda: process_incident_batch(
-        _window(spark), index, lambda p: "RCA", hist, batch_size=5))
+        _window(spark), LoopInvariants(index), lambda p: "RCA", hist,
+        batch_size=5))
     index.unpersist()
     assert out == "RCA"
     assert len(jobs) <= 4, jobs
+
+
+def test_window_starts_at_most_three_jobs(spark, tmp_path, jobs_of):
+    """One static window once the stream's invariants are built: the
+    narrowing action (dedup exchange and take) and the history append,
+    three jobs in all — the index is not collected again."""
+    index = _index(spark).cache()
+    index.count()
+    prior = LoopInvariants(index)
+    index.unpersist()
+    hist = str(tmp_path / "history")
+    out, jobs = jobs_of(spark, lambda: process_incident_batch(
+        _window(spark), prior, lambda p: "RCA", hist, batch_size=5))
+    assert out == "RCA"
+    assert len(jobs) <= 3, jobs
 
 
 @pytest.mark.parametrize("k", [1, 2])
@@ -297,15 +315,15 @@ def test_picked_rows_and_knn_match_reference(spark, tmp_path, monkeypatch,
 
     seen, similar = [], loop._similar_incidents
 
-    def spy(query_vecs, index, k):
+    def spy(query_vecs, prior, k):
         seen.append(query_vecs)
-        return similar(query_vecs, index, k)
+        return similar(query_vecs, prior, k)
 
     monkeypatch.setattr(loop, "_similar_incidents", spy)
     corpus = _index(spark)
     hist = str(tmp_path / "history")
-    out = process_incident_batch(_window(spark), corpus, lambda p: "RCA",
-                                 hist, batch_size=5, k=k)
+    out = process_incident_batch(_window(spark), LoopInvariants(corpus),
+                                 lambda p: "RCA", hist, batch_size=5, k=k)
     assert out == "RCA"
     (entry,) = spark.read.parquet(hist).collect()
 
@@ -349,7 +367,76 @@ def test_empty_text_row_adds_no_similar_incident(spark, tmp_path):
         [_row(1, "error", "svc-disk", "disk full on node 3"),
          _row(2, None, "svc-blank", None)], DEFAULT_SCHEMA)
     hist = str(tmp_path / "history")
-    process_incident_batch(batch, _index(spark), lambda p: "RCA", hist)
+    process_incident_batch(batch, LoopInvariants(_index(spark)),
+                           lambda p: "RCA", hist)
     (entry,) = spark.read.parquet(hist).collect()
     assert len(entry.batch_logs) == 2
     assert [s.hist_id for s in entry.similar_logs] == [304]
+
+
+def test_dirty_index_rows_are_dropped(spark, tmp_path):
+    """A NULL and a wrong-length ``embedding`` in the prior-incident
+    index are dropped when the index loads, as ``knn_join`` drops them;
+    the window still stores its entry, matched to the one good row."""
+    from ai_incident_analyst_spark.operators.knn import knn_join
+    from ai_incident_analyst_spark.sources.logapi import DEFAULT_SCHEMA
+
+    (good,) = (_index(spark).filter("hist_id = 304")
+               .select("embedding").first())
+    corpus = spark.createDataFrame(
+        [(1, good), (2, None), (3, [1.0, 0.0])],
+        "hist_id long, embedding array<float>")
+    batch = spark.createDataFrame(
+        [_row(1, "error", "svc-disk", "disk full on node 3")],
+        DEFAULT_SCHEMA)
+    hist = str(tmp_path / "history")
+    process_incident_batch(batch, LoopInvariants(corpus), lambda p: "RCA",
+                           hist)
+    (entry,) = spark.read.parquet(hist).collect()
+
+    q = embed_text(batch, ["message", "level"], dim=32).select(
+        F.lit(0).alias("query_id"), F.col("embedding").alias("query_vec"))
+    ref = knn_join(q, corpus, k=1, metric="cosine",
+                   corpus_id="hist_id", corpus_vec="embedding")
+    assert [r.vec_id for r in ref.collect()] == [1]
+    assert [s.hist_id for s in entry.similar_logs] == [1]
+
+
+def test_stream_collects_corpus_once(spark, tmp_path):
+    """The prior-incident index is collected when the stream is built,
+    not once per window: over three non-empty windows, every corpus row
+    is evaluated exactly once (an accumulator in a UDF on the corpus
+    counts the evaluations)."""
+    import os
+
+    from pyspark.sql.types import LongType
+
+    fixture = str(tmp_path / "fixture.json")
+    with open(fixture, "w") as f:
+        json.dump(_rows(), f)
+    opts = {"fixture_path": fixture, "since_ms": str(T0),
+            "until_ms": str(T0 + 4 * HOUR), "batch_ms": str(HOUR)}
+    hist = str(tmp_path / "history")
+    marker_dir = str(tmp_path / "ckpt" / "history_markers")
+    evals = spark.sparkContext.accumulator(0)
+
+    def counted(hist_id):
+        evals.add(1)
+        return hist_id
+
+    corpus = _corpus(spark).withColumn(
+        "hist_id", F.udf(counted, LongType())("hist_id"))
+    q = incident_stream(spark, opts, corpus, hist, str(tmp_path / "ckpt"),
+                        lambda p: "RCA").start()
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            if os.path.isdir(marker_dir) and sum(
+                    1 for m in os.listdir(marker_dir)
+                    if open(os.path.join(marker_dir, m)).read()) >= 3:
+                break
+            time.sleep(1)
+    finally:
+        q.stop()
+    assert spark.read.parquet(hist).count() == 3
+    assert evals.value == 3

@@ -32,7 +32,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
@@ -82,7 +83,7 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
     rows = []
     for sf in sfs:
-        d = f"/root/repo/testdata/clustered-sf{sf}"
+        d = os.path.join(ROOT, "testdata", f"clustered-sf{sf}")
         emb = spark.read.parquet(f"{d}/embeddings.parquet")
         n = emb.count()
         k, cmax, cmean, p99, share = cell_skew(spark, emb)

@@ -61,7 +61,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
@@ -88,7 +89,7 @@ def disorder_main() -> None:
     from ai_incident_analyst_spark.streaming.pipeline import late_drop_rows
 
     args = [a for a in sys.argv[2:]]
-    sf_dir = args[0] if args else "/root/repo/testdata/sf1"
+    sf_dir = args[0] if args else os.path.join(ROOT, "testdata", "sf1")
     n_files = int(args[1]) if len(args) > 1 else 20
     spark = get_spark("streaming-disorder-probe")
     work = tempfile.mkdtemp(prefix="stream_disorder_")
@@ -273,7 +274,8 @@ def incident_main() -> None:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/testdata/sf1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else \
+        os.path.join(ROOT, "testdata", "sf1")
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 20
     spark = get_spark("streaming-probe")
     work = tempfile.mkdtemp(prefix="stream_probe_")

@@ -29,7 +29,8 @@ import sys
 import time
 from itertools import combinations
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
@@ -98,7 +99,7 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
     rows = []
     for sf in sfs:
-        d = f"/root/repo/testdata/zipf-sf{sf}"
+        d = os.path.join(ROOT, "testdata", f"zipf-sf{sf}")
         docs = spark.read.parquet(f"{d}/documents.parquet")
         n = docs.count()
         single, manku = candidate_counts(spark, docs)

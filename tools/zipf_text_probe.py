@@ -25,7 +25,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
@@ -58,7 +59,7 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
     rows = []
     for sf in sfs:
-        d = f"/root/repo/testdata/zipf-sf{sf}"
+        d = os.path.join(ROOT, "testdata", f"zipf-sf{sf}")
         docs = spark.read.parquet(f"{d}/documents.parquet")
         n = docs.count()
         vocab, head_t, head_share = corpus_stats(docs)
