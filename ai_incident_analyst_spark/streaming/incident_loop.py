@@ -221,9 +221,9 @@ def _narrow(batch: DataFrame, batch_size: int,
     expression, is built per window."""
     project, aggs = prior.narrowing(batch.schema)
     arr = batch.withColumn("__arrival", F.monotonically_increasing_id())
-    deduped = dedup_keep_first(arr, ["message", "timestamp"],
-                               "__arrival").drop("__arrival")
+    deduped = dedup_keep_first(arr, ["message", "timestamp"], "__arrival")
     picked = pick_batch(deduped, batch_size, "timestamp")
+    # the projection lists the batch's own columns: __arrival ends here
     return picked.select(*project).agg(*aggs)
 
 
