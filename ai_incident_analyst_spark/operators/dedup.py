@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .knn import block_pairs
 from .util import guard_pairwise_input, local_frame, spread
 
 
@@ -677,127 +678,74 @@ def simhash_neardup_manku(df: DataFrame, id_col: str, text_col: str,
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
+def _cosine_pairs(rows: DataFrame, keys: list[str],
+                  threshold: float) -> DataFrame:
+    """``(keys…, id_a, id_b, cosine)`` with ``id_a < id_b`` and cosine
+    ≥ ``threshold`` from ``(id, v, keys…)`` rows (plus ``__pi, __pj,
+    __b`` when triangle-blocked), in ONE grouped pass. A group is the
+    rows sharing ``keys``, the block pair and the vector length (so no
+    dimension probe), scored by one ``knn.block_pairs`` call: upper
+    triangle on the diagonal, block ``__pi`` × block ``__pj`` off it.
+    NULL ids and vectors are dropped before the shuffle; ids keep their
+    input type."""
+    import numpy as np
+    import pandas as pd
+
+    types = {f.name: f.dataType.simpleString() for f in rows.schema.fields}
+    schema = ", ".join([f"`{c}` {types[c]}" for c in keys]
+                       + [f"id_a {types['id']}", f"id_b {types['id']}",
+                          "cosine double"])
+    blocks = ["__pi", "__pj"] if "__b" in types else []
+
+    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["id"].to_numpy()
+        mat = np.array(list(pdf["v"]), dtype=np.float64)
+        if blocks and pdf["__pi"].iloc[0] != pdf["__pj"].iloc[0]:
+            left = (pdf["__b"] == pdf["__pi"].iloc[0]).to_numpy()
+            i, j, cos = block_pairs(mat[left], mat[~left], threshold)
+            a, b = ids[left][i], ids[~left][j]
+        else:
+            i, j, cos = block_pairs(mat, None, threshold)
+            a, b = ids[i], ids[j]
+        fwd, kept = a < b, a != b
+        out = pd.DataFrame({"id_a": np.where(fwd, a, b)[kept],
+                            "id_b": np.where(fwd, b, a)[kept],
+                            "cosine": cos[kept]})
+        for c in reversed(keys):
+            out.insert(0, c, pdf[c].iloc[0])
+        return out
+
+    return (rows.filter(F.col("id").isNotNull() & F.col("v").isNotNull())
+            .withColumn("__d", F.size("v"))
+            .groupBy(*keys, *blocks, "__d")
+            .applyInPandas(score, schema=schema))
+
+
 def embedding_cosine_neardup(df: DataFrame, id_col: str, vec_col: str,
                              threshold: float = 0.9) -> DataFrame:
-    """Pairs of rows whose embeddings have cosine ≥ threshold (exact).
+    """Pairs of rows whose embeddings have cosine ≥ threshold (exact):
+    ``(id_a, id_b, cosine)``, ``id_a < id_b``, ids in their input type.
 
-    Physical design: one broadcast of the L2-normalized matrix, then each
-    partition computes its block's cosine against the whole corpus with a
-    single BLAS matmul inside ``mapInPandas`` and emits only above-threshold
-    pairs with id_a < id_b (each pair produced exactly once, by the
-    partition owning its smaller id). The naive alternative — a Catalyst
-    self-cross-join with a per-pair higher-order aggregate — is 30-100×
-    slower (interpreted expression per pair) and shuffles O(n²).
-
-    Scale limit is the broadcast (n·d doubles). Beyond driver memory:
-    grid-block the join (range-bucket ids on both sides) or pre-block with
-    hyperplane LSH / ``minhash_lsh_neardup``-style banding; this operator
-    is also the exact verify stage after any such blocking.
+    Triangle block-join, nothing collected: rows hash into B blocks by
+    id and each row joins the B ``_cosine_pairs`` groups (unordered
+    block pairs) that hold its block — B× shuffle, the n²/2 scores over
+    B(B+1)/2 BLAS groups. B is the smallest with B(B+1)/2 ≥ the default
+    parallelism ``spread`` targets (3 on 4 cores). A NULL, zero-norm,
+    NaN or other-length vector pairs with none of the rest. Also the
+    exact verify stage after any LSH / banding blocking.
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    rows = df.select(F.col(id_col).alias("id"),
-                     F.col(vec_col).cast("array<double>").alias("v")).collect()
-    ids = np.array([r["id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    nmat = mat / norms[:, None]
-    order = np.argsort(ids)
-    ids, nmat = ids[order], nmat[order]
-    bc = df.sparkSession.sparkContext.broadcast((ids, nmat))
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_ids, all_mat = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            my_ids = pdf["id"].to_numpy(dtype=np.int64)
-            pos = np.searchsorted(all_ids, my_ids)
-            sims = all_mat[pos] @ all_mat.T  # (block, n) BLAS
-            # emit only (my_id < other_id) pairs above threshold
-            mask = (sims >= threshold) & (my_ids[:, None] < all_ids[None, :])
-            bi, ci = np.nonzero(mask)
-            yield pd.DataFrame({
-                "id_a": my_ids[bi],
-                "id_b": all_ids[ci],
-                "cosine": sims[bi, ci],
-            })
-
-    base = spread(df.select(F.col(id_col).alias("id")), "id")
-    return base.mapInPandas(part, schema="id_a long, id_b long, cosine double")
-
-
-def embedding_cosine_neardup_blocked(df: DataFrame, id_col: str, vec_col: str,
-                                     threshold: float = 0.9,
-                                     n_blocks: int = 4) -> DataFrame:
-    """Exact cosine near-dup pairs WITHOUT any driver collect/broadcast —
-    the 100 TB path when the corpus matrix exceeds driver memory.
-
-    Triangle block-join: rows hash into ``n_blocks`` blocks by id; each
-    unordered block pair (i ≤ j) becomes one group key, each row is
-    replicated to the ≤ n_blocks pairs that contain its block, and
-    ``applyInPandas`` computes the (i-side × j-side) BLAS cosine inside
-    each group, emitting id_a < id_b pairs above threshold. Shuffle volume
-    is n_blocks× the corpus (vs. the broadcast variant's 1× + driver
-    matrix); work is the same O(n²/2) flops spread over B(B+1)/2
-    independent groups — size n_blocks so one block pair fits an
-    executor. Identical results to ``embedding_cosine_neardup``.
-    """
-    from typing import Iterator  # noqa: F401
-
-    import numpy as np
-    import pandas as pd
-
-    rows = df.select(F.col(id_col).alias("id"),
-                     F.col(vec_col).cast("array<double>").alias("v"))
-    b = F.pmod(F.xxhash64("id"), F.lit(n_blocks)).cast("int")
-    tagged = rows.withColumn("__b", b)
-
-    # replicate: a row in block x participates in pairs (min(x,o), max(x,o))
-    # for every other block o — emitted once per pair
-    pairs = F.array(*[
-        F.struct(F.least(F.col("__b"), F.lit(o)).alias("pi"),
-                 F.greatest(F.col("__b"), F.lit(o)).alias("pj"))
-        for o in range(n_blocks)
-    ])
-    exploded = (
-        tagged.withColumn("__p", F.explode(F.array_distinct(pairs)))
+    par = df.sparkSession.sparkContext.defaultParallelism
+    nb = next(b for b in range(1, par + 1) if b * (b + 1) >= 2 * par)
+    rows = (
+        df.select(F.col(id_col).alias("id"),
+                  F.col(vec_col).cast("array<double>").alias("v"))
+        .withColumn("__b", F.pmod(F.xxhash64("id"), F.lit(nb)).cast("int"))
+        .withColumn("__o", F.explode(F.sequence(F.lit(0), F.lit(nb - 1))))
         .select("id", "v", "__b",
-                F.col("__p.pi").alias("pi"), F.col("__p.pj").alias("pj"))
+                F.least("__b", "__o").alias("__pi"),
+                F.greatest("__b", "__o").alias("__pj"))
     )
-
-    def per_pair(pdf: pd.DataFrame) -> pd.DataFrame:
-        pi, pj = int(pdf["pi"].iloc[0]), int(pdf["pj"].iloc[0])
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["v"]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        mat = mat / norms[:, None]
-        blocks = pdf["__b"].to_numpy()
-        if pi == pj:
-            sims = mat @ mat.T
-            mask = (sims >= threshold) & (ids[:, None] < ids[None, :])
-            ai, bi = np.nonzero(mask)
-            return pd.DataFrame({"id_a": ids[ai], "id_b": ids[bi],
-                                 "cosine": sims[ai, bi]})
-        li, ri = blocks == pi, blocks == pj
-        sims = mat[li] @ mat[ri].T
-        lids, rids = ids[li], ids[ri]
-        mask = sims >= threshold
-        ai, bi = np.nonzero(mask)
-        a, c = lids[ai], rids[bi]
-        lo, hi = np.minimum(a, c), np.maximum(a, c)
-        return pd.DataFrame({"id_a": lo, "id_b": hi,
-                             "cosine": sims[ai, bi]})
-
-    return (
-        exploded.groupBy("pi", "pj")
-        .applyInPandas(per_pair, schema="id_a long, id_b long, cosine double")
-    )
+    return _cosine_pairs(rows, [], threshold)
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
@@ -1167,9 +1115,11 @@ def semantic_neardup(df: DataFrame, id_col: str, vec_col: str,
     ``cluster_col`` uses an existing bucketing column (topic, label,
     source shard) — fully relational and oracle-checkable. ``None`` fits
     distributed k-means (operators/clustering.py) and assigns via the
-    zero-shuffle Arrow pass. Pairs join on the cluster key (equi-join,
-    never a cross join); cosine is the exact Catalyst HOF expression.
-    Returns (cluster, id_a, id_b, cosine) with cosine ≥ threshold.
+    zero-shuffle Arrow pass. Each cluster is one ``_cosine_pairs`` group
+    (never a cross join), scored by ``knn.block_pairs``. Returns
+    (cluster, id_a, id_b, cosine) with cosine ≥ threshold; rows with a
+    NULL cluster, or a NULL, zero-norm, NaN or other-length vector,
+    pair with none of the rest.
 
     The ``cluster_col`` (fixed-bucketing) path is Σ|cluster|² with
     cluster sizes PROPORTIONAL to n (a 10-label column means n²/10
@@ -1180,34 +1130,21 @@ def semantic_neardup(df: DataFrame, id_col: str, vec_col: str,
     the shipped recommendation — k grows with n so cluster sizes stay
     bounded — and is not capped.
     """
-    from ..functions.vectors import cosine_similarity
-
     if cluster_col is not None:
         guard_pairwise_input(df, max_rows, "semantic_neardup(cluster_col=…)",
                              "semantic_neardup(cluster_col=None) — the "
                              "k-means path with n-proportional k", force)
+    src, cl = df, cluster_col
     if cluster_col is None:
         from .clustering import kmeans_assign, kmeans_fit
         cents, _ = kmeans_fit(df.select(id_col, vec_col), id_col, vec_col,
                               k, max_iter)
-        src = kmeans_assign(df.select(id_col, vec_col), vec_col, cents,
-                            out_col="__cl")
-        cl = "__cl"
-    else:
-        src = df.select(id_col, vec_col, cluster_col)
-        cl = cluster_col
-    # materialize once: both self-join sides consume the assignment
-    src = src.localCheckpoint(eager=False)
-    a = src.select(F.col(cl).alias("cluster"),
-                   F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    b = src.select(F.col(cl).alias("cluster"),
-                   F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-    return (
-        a.join(b, "cluster").filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine_similarity("__va", "__vb"))
-        .filter(F.col("cosine") >= threshold)
-        .select("cluster", "id_a", "id_b", "cosine")
-    )
+        src, cl = kmeans_assign(df.select(id_col, vec_col), vec_col, cents,
+                                out_col="__cl"), "__cl"
+    rows = src.select(F.col(cl).alias("cluster"), F.col(id_col).alias("id"),
+                      F.col(vec_col).cast("array<double>").alias("v")) \
+        .filter(F.col("cluster").isNotNull())
+    return _cosine_pairs(rows, ["cluster"], threshold)
 
 
 # ---------------------------------------------------------------------------

@@ -80,10 +80,8 @@ def block_topk(qmat, cmat, k: int, metric: str = "l2_sq",
         score = np.maximum(qnorm2[:, None] + cnorm2[None, :] - 2.0 * dot,
                            0.0) + 0.0
     else:
-        qnorm2 = (qmat * qmat).sum(axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            score = dot / (np.sqrt(qnorm2)[:, None]
-                           * np.sqrt(cnorm2)[None, :])
+        score = _cosine(dot, np.sqrt((qmat * qmat).sum(axis=1)),
+                        np.sqrt(cnorm2))
     if round_dp is not None:
         score = round_half_away(score, round_dp)
     key = -score if metric == "cosine" else score
@@ -101,6 +99,45 @@ def block_topk(qmat, cmat, k: int, metric: str = "l2_sq",
     else:
         idx = np.argsort(key, axis=1, kind="stable")[:, :k]
     return idx, np.take_along_axis(score, idx, axis=1)
+
+
+def _cosine(dot, anorm, bnorm):
+    """``dot / (‖a‖·‖b‖)``, the one cosine score form: a zero-norm row
+    or a NaN component scores NaN."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dot / (anorm[:, None] * bnorm[None, :])
+
+
+#: left rows per ``block_pairs`` tile: a group's peak score matrix is
+#: ``_PAIR_TILE`` × n_b doubles, not n_a × n_b
+_PAIR_TILE = 1024
+
+
+def block_pairs(amat, bmat, threshold: float):
+    """The ``(i, j, score)`` cells of two float64 row blocks whose
+    cosine (``block_topk``'s form) is ≥ ``threshold``; ``bmat=None``
+    pairs ``amat`` with itself, upper triangle ``i < j`` only. A NaN
+    score (zero-norm vector, NaN component) is never a pair, as in
+    ``knn_join``. Every cosine near-dup pair in the package is scored
+    here, ``_PAIR_TILE`` left rows at a time."""
+    import numpy as np
+
+    upper = bmat is None
+    bmat = amat if upper else bmat
+    anorm = np.sqrt((amat * amat).sum(axis=1))
+    bnorm = anorm if upper else np.sqrt((bmat * bmat).sum(axis=1))
+    out = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+    for s in range(0, len(amat), _PAIR_TILE):
+        e, c0 = min(s + _PAIR_TILE, len(amat)), s if upper else 0
+        score = _cosine(amat[s:e] @ bmat[c0:].T, anorm[s:e], bnorm[c0:])
+        hit = score >= threshold  # NaN compares False
+        if upper:
+            hit &= np.arange(c0, len(bmat)) > np.arange(s, e)[:, None]
+        i, j = np.nonzero(hit)
+        out.append((i + s, j + c0, score[i, j]))
+    return tuple(np.concatenate(c) for c in zip(*out))
 
 
 def _stack(rows, what: str):
@@ -158,7 +195,8 @@ def _valid_rows(pdf: pd.DataFrame, vec_col: str, d: int):
                      bool, len(pdf))
     if not ok.all():
         pdf = pdf[ok].reset_index(drop=True)
-    return pdf, np.array(list(pdf[vec_col]), dtype=np.float64)
+    return pdf, np.array(list(pdf[vec_col]),
+                         dtype=np.float64).reshape(len(pdf), d)
 
 
 def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -428,8 +466,8 @@ def lsh_cosine_knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     plane-index tie-break) so the probe set is engine-portable; the
     corpus side is untouched — still one row per (vector, table).
 
-    A query or corpus row whose vector is NULL or not ``d`` long is
-    dropped in the bucketing pass.
+    A query or corpus row whose vector is NULL, not ``d`` long or
+    zero-norm is dropped in the bucketing pass.
     """
     import numpy as np
 
@@ -462,6 +500,10 @@ def lsh_cosine_knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
             weights = (1 << np.arange(n_p)).astype(np.int64)
             for pdf in batches:
                 pdf, mat = _valid_rows(pdf, vec_name, d_)
+                # zero-norm: no cosine (knn_join's rule), and the verify
+                # would divide by zero
+                nz = (mat * mat).sum(axis=1) > 0
+                pdf, mat = pdf[nz].reset_index(drop=True), mat[nz]
                 if len(pdf) == 0:
                     continue
                 ids = pdf[id_name].to_numpy()

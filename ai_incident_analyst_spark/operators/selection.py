@@ -59,8 +59,7 @@ def mmr_select(df: DataFrame, id_col: str, vec_col: str, k: int,
     PRACTICAL k BOUND: greedy selection is inherently k-SEQUENTIAL —
     each pick depends on all previous picks, so the operator runs ONE
     Spark job per pick (k jobs total; driver state is the k×d picked
-    vectors re-entering the plan as literals, same layering as the
-    ``embedding_cosine_neardup`` broadcast limit). Sized for the
+    vectors re-entering the plan as literals). Sized for the
     intended k ≲ 100 coreset/diversity-probe use: per-job cost is one
     cached corpus scan with a ≤k-term codegen expression, but job-
     submission latency and expression width both grow with k. For

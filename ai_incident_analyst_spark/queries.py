@@ -882,16 +882,13 @@ SELECT a.vec_id AS id_a, b.vec_id AS id_b,
 FROM e a JOIN e b ON a.vec_id < b.vec_id
 WHERE list_sum([ x[1]*x[2] for x in list_zip(a.v, b.v) ])
       / (sqrt(list_sum([ x*x for x in a.v ])) * sqrt(list_sum([ x*x for x in b.v ]))) >= 0.4
-""", doc="exact cosine near-dup via triangle block-join: NO driver "
-         "collect/broadcast — the 100 TB path when the corpus matrix "
-         "exceeds driver memory; identical values to embedding_neardup "
-         "(same oracle), shuffle volume n_blocks x corpus")
+""", doc="embedding_neardup on a 7-way repartitioned input: the "
+         "triangle block-join's pairs and values must not depend on the "
+         "input layout (same oracle)")
 def q_embedding_neardup_blocked(spark, sf_dir):
-    from .operators.dedup import embedding_cosine_neardup_blocked
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings").repartition(7)
     return (
-        embedding_cosine_neardup_blocked(emb, "vec_id", "embedding",
-                                         threshold=0.4, n_blocks=4)
+        embedding_cosine_neardup(emb, "vec_id", "embedding", threshold=0.4)
         .withColumn("cosine", F.round("cosine", 6))
     )
 

@@ -1,7 +1,10 @@
 """Dedup operator tests: reference-parity fixtures + fuzzy-dedup
 self-oracles (exact Jaccard / hamming computed in Python)."""
 
+import ast
 import itertools
+import math
+import pathlib
 
 import pytest
 from pyspark.sql import Row
@@ -190,26 +193,82 @@ def test_simhash_manku_parameter_validation(spark):
                               chunks=4, combine=4)
 
 
-def test_blocked_cosine_neardup_equals_broadcast_variant(spark, sf_dir):
-    from pyspark.sql import functions as F
+def test_cosine_neardup_equals_numpy_bruteforce(spark, sf_dir):
+    """The triangle block-join returns exactly the i < j pairs a numpy
+    all-pairs cosine finds at the same threshold."""
+    import numpy as np
 
     from ai_incident_analyst_spark.operators.dedup import (
         embedding_cosine_neardup,
-        embedding_cosine_neardup_blocked,
     )
     from ai_incident_analyst_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    a = {(r.id_a, r.id_b): round(r.cosine, 9)
-         for r in embedding_cosine_neardup(emb, "vec_id", "embedding",
-                                           threshold=0.25).collect()}
-    b = {(r.id_a, r.id_b): round(r.cosine, 9)
-         for r in embedding_cosine_neardup_blocked(
-             emb, "vec_id", "embedding",
-             threshold=0.25, n_blocks=3).collect()}
-    assert a.keys() == b.keys() and len(a) > 0
-    for k in a:
-        assert abs(a[k] - b[k]) < 1e-9
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.array([r.vec_id for r in rows])
+    mat = np.array([r.embedding for r in rows], dtype=np.float64)
+    unit = mat / np.linalg.norm(mat, axis=1)[:, None]
+    sims = unit @ unit.T
+    ai, bi = np.nonzero((sims >= 0.25) & (ids[:, None] < ids[None, :]))
+    want = {(int(ids[a]), int(ids[b])): sims[a, b] for a, b in zip(ai, bi)}
+    got = {(r.id_a, r.id_b): r.cosine
+           for r in embedding_cosine_neardup(emb, "vec_id", "embedding",
+                                             threshold=0.25).collect()}
+    assert got.keys() == want.keys() and len(got) > 0
+    for k in got:
+        assert abs(got[k] - want[k]) < 1e-9
+
+
+_GOOD = [(i, [math.sin(i * 7 + j) for j in range(8)], f"l{i % 3}")
+         for i in range(29)]
+
+
+@pytest.mark.parametrize("dirty", [None, [1.0, 2.0], [0.0] * 8],
+                         ids=["null", "short", "zero"])
+@pytest.mark.parametrize("op", ["embedding_cosine_neardup",
+                                "semantic_neardup_label"])
+def test_cosine_neardup_ignores_dirty_row(spark, op, dirty):
+    """A NULL, wrong-length or all-zero vector pairs with nothing and
+    leaves the clean rows' pairs as they are."""
+    from ai_incident_analyst_spark.operators.dedup import (
+        embedding_cosine_neardup,
+        semantic_neardup,
+    )
+
+    def run(rows):
+        df = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, label string")
+        if op == "embedding_cosine_neardup":
+            out = embedding_cosine_neardup(df, "vec_id", "embedding", 0.3)
+        else:
+            out = semantic_neardup(df, "vec_id", "embedding", 0.3,
+                                   cluster_col="label")
+        return {tuple(r[:-1]): round(r[-1], 12) for r in out.collect()}
+
+    clean = run(_GOOD)
+    assert len(clean) > 0
+    assert run(_GOOD + [(99, dirty, "l0")]) == clean
+
+
+def test_dedup_scores_cosine_only_through_block_pairs():
+    """Every cosine pair in ``operators/dedup.py`` is scored by
+    ``knn.block_pairs``: no Catalyst ``cosine_similarity`` and no numpy
+    normalise-and-mask kernel of its own."""
+    path = pathlib.Path(__file__).resolve().parent.parent \
+        / "ai_incident_analyst_spark" / "operators" / "dedup.py"
+    offenders = []
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if (isinstance(f, ast.Name) and f.id == "cosine_similarity") or (
+                isinstance(f, ast.Attribute)
+                and (f.attr == "cosine_similarity"
+                     or (f.attr == "norm"
+                         and isinstance(f.value, ast.Attribute)
+                         and f.value.attr == "linalg"))):
+            offenders.append(node.lineno)
+    assert offenders == [], f"cosine scored outside block_pairs: {offenders}"
 
 
 def test_connected_components_chain_and_clique(spark):

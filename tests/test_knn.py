@@ -213,6 +213,59 @@ def test_knn_drops_dirty_rows(spark, metric):
             {10: [1, 4, 5, 6], 11: [1, 4, 5, 6]}
 
 
+def test_lsh_cosine_drops_zero_norm_rows(spark):
+    """A zero-norm vector (bucket 0 in every table) sharing a bucket
+    with other rows is dropped on both sides, as ``knn_join`` drops it
+    under cosine, instead of dividing by zero in the verify."""
+    from ai_incident_analyst_spark.operators.knn import lsh_cosine_knn_join
+
+    good = [[math.sin(i * 5 + j) for j in range(8)] for i in range(29)]
+    c = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(good)] + [(99, [0.0] * 8)],
+        "vec_id long, embedding array<double>")
+    q = spark.createDataFrame([(1, good[3]), (2, [0.0] * 8)],
+                              "query_id long, query_vec array<double>")
+    exact = {(r.query_id, r.vec_id): r.distance
+             for r in knn_join(q, c, k=3, metric="cosine").collect()}
+    assert {qid for qid, _ in exact} == {1} and len(exact) == 3
+    got = lsh_cosine_knn_join(q, c, k=3, n_planes=2, n_tables=2).collect()
+    assert got and all(r.query_id == 1 and r.vec_id != 99 for r in got)
+    for r in got:
+        if (1, r.vec_id) in exact:
+            assert abs(r.distance - exact[(1, r.vec_id)]) < 1e-12
+
+
+@pytest.mark.parametrize("tile", [1, 3, 1024])
+def test_block_pairs_matches_bruteforce(monkeypatch, tile):
+    """``block_pairs`` returns exactly the cells a full cosine matrix
+    holds at or above the threshold, whatever the tile size; the
+    self form keeps i < j only, and NaN scores are never pairs."""
+    from ai_incident_analyst_spark.operators import knn
+
+    monkeypatch.setattr(knn, "_PAIR_TILE", tile)
+    rng = np.random.default_rng(3)
+    a, b = rng.standard_normal((11, 4)), rng.standard_normal((7, 4))
+    a[5] = 0.0
+    b[2, 1] = np.nan
+
+    def brute(x, y):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            s = (x @ y.T) / (np.linalg.norm(x, axis=1)[:, None]
+                             * np.linalg.norm(y, axis=1)[None, :])
+        return s
+
+    for x, y, upper in ((a, b, False), (a, None, True), (a[:0], b, False)):
+        s = brute(x, x if y is None else y)
+        hit = s >= 0.1
+        if upper:
+            hit &= np.triu(np.ones_like(hit), 1).astype(bool)
+        i, j, score = knn.block_pairs(x, y, 0.1)
+        assert sorted(zip(i.tolist(), j.tolist())) == \
+            sorted(zip(*[v.tolist() for v in np.nonzero(hit)]))
+        assert np.allclose(score, s[i, j], rtol=0, atol=1e-12)
+        assert 5 not in i.tolist() and (upper or 2 not in j.tolist())
+
+
 def test_knn_empty_queries_and_mixed_lengths(spark):
     c = _dirty_corpus(spark)
     empty = spark.createDataFrame([], "query_id long, query_vec array<double>")
